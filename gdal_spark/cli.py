@@ -454,7 +454,7 @@ def _cmd_gdaladdo(argv) -> int:
             w = (int(ext.mx) + 1) * a.tile
             h = (int(ext.my) + 1) * a.tile
         n = write_ovr(t, a.src + ".ovr", width=w, height=h,
-                      tile=a.tile)
+                      tile=a.tile, resampling=a.resampling)
         print(json.dumps({"ovr_levels": n, "path": a.src + ".ovr"}))
         return 0
     if a.zoom is None:

@@ -6,11 +6,11 @@ level is a GroundOverlay image plus a .kml carrying its <Region> (the
 geodetic LatLonAltBox + Lod pixel gates) and NetworkLinks to its four
 children — Google Earth streams only the tiles whose Region is active.
 
-Spark split: the PYRAMID (every overview level) and every PNG tile
-encode in executors (build_pyramid + per-tile applyInPandas, same
-machinery as the MVT/PMTiles sinks); only the kml TEXT tree — metadata,
-a few hundred bytes per tile — writes on the driver from the collected
-(z, x, y) list.
+Spark split: the PYRAMID and every PNG tile encode in executors
+(build_pyramid — one bounded shuffle per three overview levels — then a
+per-tile applyInPandas, same machinery as the MVT/PMTiles sinks); only
+the kml TEXT tree — metadata, a few hundred bytes per tile — writes on
+the driver from the collected (z, x, y) list.
 """
 
 from __future__ import annotations

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..core import vsi
+from ..raster.pyramid import overviews
 from ..raster.tiles import TILE_SCHEMA, encode_px
 
 # TIFF tag ids
@@ -584,80 +585,25 @@ def write_gtiff_tiles(tiles_df: DataFrame, path: str, width: int,
     object-store analogue is a multipart upload with one part per tile
     run; the reference's GTiff driver serializes through one handle).
     Tiles absent from the table stay at `fill`."""
-    import os
-
     nx = (width + tile - 1) // tile
     ny = (height + tile - 1) // tile
     dt = np.dtype(dtype)
     block_bytes = tile * tile * dt.itemsize
     data_start = 8
     n_blocks = nx * ny
-
-    entries = []
-
-    def tag(tg, typ, vals):
-        entries.append((tg, typ, vals))
-
     offs = [data_start + k * block_bytes for k in range(n_blocks)]
-    tag(W, 4, [width])
-    tag(H, 4, [height])
-    tag(BITS, 3, [dt.itemsize * 8])
-    tag(COMP, 3, [1])
-    tag(PHOTO, 3, [1])
-    tag(SPP, 3, [1])
-    tag(TILE_W, 3, [tile])
-    tag(TILE_L, 3, [tile])
-    tag(TILE_OFF, 4, offs)
-    tag(TILE_CNT, 4, [block_bytes] * n_blocks)
-    tag(SAMPLE_FORMAT, 3, [_SF_OF_KIND[dt.kind]])
-    if geotransform is not None:
-        gx0, dx, _r1, gy0, _r2, dy = geotransform
-        tag(MODEL_SCALE, 12, [dx, -dy, 0.0])
-        tag(MODEL_TIEPOINT, 12, [0.0, 0.0, 0.0, gx0, gy0, 0.0])
-    entries.sort(key=lambda e: e[0])
-
     ifd_off = data_start + n_blocks * block_bytes
-    n = len(entries)
-    tail_off = ifd_off + 2 + 12 * n + 4
-    ifd = struct.pack("<H", n)
-    tail = b""
-    for tg, typ, vals in entries:
-        fmt = _TYPE_FMT[typ]
-        payload = b"".join(struct.pack(fmt, v) for v in vals)
-        if len(payload) <= 4:
-            ifd += struct.pack("<HHI", tg, typ, len(vals)) \
-                + payload.ljust(4, b"\x00")
-        else:
-            ifd += struct.pack("<HHII", tg, typ, len(vals),
-                               tail_off + len(tail))
-            tail += payload
-    ifd += struct.pack("<I", 0)
+    entries = _cog_entries(width, height, tile, dt, offs, block_bytes,
+                           geotransform, False)
 
-    # driver: header + preallocated fill + IFD (one sequential pass of
-    # fill blocks; on a DFS this would be a sparse allocate)
-    fill_block = np.full((tile, tile), fill, dt).tobytes()
     with open(path, "wb") as f:
         f.write(b"II*\x00" + struct.pack("<I", ifd_off))
-        for _ in range(n_blocks):
-            f.write(fill_block)
-        f.write(ifd + tail)
+        _preallocate(f, data_start, n_blocks, fill, tile, dt)
+        f.write(_ifd_blob(entries, ifd_off, 0))
 
-    def emit(batches):
-        with open(path, "r+b") as f:
-            for pdf in batches:
-                for r in pdf.itertuples():
-                    tx, ty = int(r.tile_x), int(r.tile_y)
-                    if not (0 <= tx < nx and 0 <= ty < ny):
-                        continue
-                    arr = np.frombuffer(r.px, np.dtype(r.dtype)) \
-                        .reshape(tile, tile).astype(dt)
-                    f.seek(data_start + (ty * nx + tx) * block_bytes)
-                    f.write(arr.tobytes())
-            yield pd.DataFrame({"n": [1]})
-
-    # force execution; each task writes only its own disjoint ranges
-    tiles_df.mapInPandas(
-        emit, T.StructType([T.StructField("n", T.IntegerType())])).count()
+    _pwrite_levels(tiles_df.selectExpr("0 AS lv", "tile_x", "tile_y",
+                                       "dtype", "px"),
+                   path, tile, dt, [(nx, ny)], [data_start])
 
 
 def tile_index(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -729,44 +675,6 @@ def cog_levels(width: int, height: int, tile: int) -> list:
     return lv
 
 
-def overview_tiles(tiles_df: DataFrame, tile: int, dtype: str,
-                   fill: float = 0.0) -> DataFrame:
-    """One overview level: child tile (tx, ty) average-pools 2x2 into
-    quadrant (tx&1, ty&1) of parent (tx>>1, ty>>1). A single groupBy on
-    the parent key (<=4 rows per group) — the pyramid is log2(n) such
-    bounded shuffles, never a driver-side mosaic. Average is the exact
-    mean of the 4 children's pixels in float64 (GDAL's AVERAGE
-    resampling); absent children contribute `fill` implicitly by
-    staying at `fill` in the parent."""
-    dt = np.dtype(dtype)
-    half = tile // 2
-    cols = ["tile_x", "tile_y", "dtype", "px"]
-
-    def agg(key, pdf):
-        out = np.full((tile, tile), fill, np.float64)
-        for r in pdf.itertuples():
-            a = np.frombuffer(r.px, np.dtype(r.dtype)) \
-                .reshape(tile, tile).astype(np.float64)
-            q = a.reshape(half, 2, half, 2).mean(axis=(1, 3))
-            qy, qx = int(r.tile_y) & 1, int(r.tile_x) & 1
-            out[qy * half:(qy + 1) * half,
-                qx * half:(qx + 1) * half] = q
-        return pd.DataFrame(
-            [(int(key[0]), int(key[1]), str(dt),
-              out.astype(dt).tobytes())], columns=cols)
-
-    src = tiles_df.select(
-        (tiles_df.tile_x.cast("long") / 2).cast("long").alias("ptx"),
-        (tiles_df.tile_y.cast("long") / 2).cast("long").alias("pty"),
-        "tile_x", "tile_y", "dtype", "px")
-    schema = T.StructType([
-        T.StructField("tile_x", T.LongType()),
-        T.StructField("tile_y", T.LongType()),
-        T.StructField("dtype", T.StringType()),
-        T.StructField("px", T.BinaryType())])
-    return src.groupBy("ptx", "pty").applyInPandas(agg, schema)
-
-
 def _cog_entries(w: int, h: int, tile: int, dt: np.dtype, offs: list,
                  block_bytes: int, geotransform, overview: bool) -> list:
     entries = []
@@ -817,6 +725,107 @@ def _ifd_size(n_entries: int, n_blocks: int, geo: bool,
     return 2 + 12 * n + 4 + tail
 
 
+def _preallocate(f, start: int, n_blocks: int, fill: float, tile: int,
+                 dt: np.dtype) -> None:
+    """Size the data region [start, start + n_blocks blocks) at `fill`:
+    an all-zero-bytes fill only extends the file (a sparse allocate, no
+    pixel bytes through the driver); any other fill is written block by
+    block. Leaves the position at the region's end."""
+    block = np.full((tile, tile), fill, dt).tobytes()
+    end = start + n_blocks * len(block)
+    if block.strip(b"\x00"):
+        f.seek(start)
+        for _ in range(n_blocks):
+            f.write(block)
+    else:
+        f.truncate(end)
+    f.seek(end)
+
+
+def _pwrite_levels(lv_tiles: DataFrame, path: str, tile: int,
+                   dt: np.dtype, grids: list, data_off: list) -> None:
+    """ONE job: every task pwrites its own rows (lv, tile_x, tile_y,
+    dtype, px) into the preallocated file — level `lv`'s blocks start at
+    data_off[lv] on a grids[lv] = (nx, ny) row-major grid. Tiles off
+    their level's grid are dropped."""
+    block_bytes = tile * tile * dt.itemsize
+
+    def emit(batches):
+        with open(path, "r+b") as f:
+            for pdf in batches:
+                for r in pdf.itertuples():
+                    lv, tx, ty = int(r.lv), int(r.tile_x), int(r.tile_y)
+                    nx, ny = grids[lv]
+                    if not (0 <= tx < nx and 0 <= ty < ny):
+                        continue
+                    arr = np.frombuffer(r.px, np.dtype(r.dtype)) \
+                        .reshape(tile, tile).astype(dt)
+                    f.seek(data_off[lv] + (ty * nx + tx) * block_bytes)
+                    f.write(arr.tobytes())
+            yield pd.DataFrame({"n": [1]})
+
+    # collect the one-row acks rather than count(): no aggregate
+    # exchange, so the write is a single stage after the pyramid shuffle
+    lv_tiles.mapInPandas(
+        emit, T.StructType([T.StructField("n", T.IntegerType())])).collect()
+
+
+def _level_pyramid(tiles_df: DataFrame, levels: int, with_base: bool,
+                   resampling: str, tile: int, fill: float) -> DataFrame:
+    """Rows (lv, tile_x, tile_y, dtype, px) of pyramid levels 1..levels
+    (and level 0, `tiles_df` itself, when `with_base`): the overviews come
+    from the shared reducer (raster.pyramid.overviews) in one bounded
+    shuffle per three levels. 4-column (tile_x, tile_y, dtype, px) inputs
+    read as band 1 without nodata."""
+    have = set(tiles_df.columns)
+    base = tiles_df.selectExpr(
+        "band" if "band" in have else "1 AS band", "0 AS zoom", "tile_x",
+        "tile_y", "dtype",
+        "nodata" if "nodata" in have else "CAST(NULL AS DOUBLE) AS nodata",
+        "px")
+    pyr = overviews(base, levels, resampling, tile, fill)
+    if with_base:
+        pyr = base.unionByName(pyr)
+    return pyr.selectExpr("-zoom AS lv", "tile_x", "tile_y", "dtype", "px")
+
+
+def _pyramid_tiff(path: str, levels: list, stored: range, data_order: range,
+                  tile: int, dt: np.dtype, fill: float,
+                  geotransform) -> tuple:
+    """Driver side of a multi-IFD tiled TIFF: header, the IFD chain of the
+    `stored` levels (cog_levels indices, in chain order; overviews flagged
+    NewSubfileType=1) at the front, then the data region in `data_order`,
+    sized at `fill`. Returns (grids, data_off), indexed by level."""
+    block_bytes = tile * tile * dt.itemsize
+    geo = geotransform is not None
+    grids = [((w + tile - 1) // tile, (h + tile - 1) // tile)
+             for w, h in levels]
+    ifd_offs, pos = {}, 8
+    for lv in stored:
+        ifd_offs[lv] = pos
+        pos += _ifd_size(11 + (lv > 0) + 2 * (geo and lv == 0),
+                         grids[lv][0] * grids[lv][1], geo, lv > 0)
+    data_start = pos
+    data_off = [0] * len(levels)
+    for lv in data_order:
+        data_off[lv] = pos
+        pos += grids[lv][0] * grids[lv][1] * block_bytes
+
+    with open(path, "wb") as f:
+        f.write(b"II*\x00" + struct.pack("<I", ifd_offs[stored[0]]))
+        for i, lv in enumerate(stored):
+            nx, ny = grids[lv]
+            offs = [data_off[lv] + k * block_bytes for k in range(nx * ny)]
+            nxt = ifd_offs[stored[i + 1]] if i + 1 < len(stored) else 0
+            entries = _cog_entries(*levels[lv], tile, dt, offs, block_bytes,
+                                   geotransform, lv > 0)
+            f.write(_ifd_blob(entries, ifd_offs[lv], nxt))
+        _preallocate(f, data_start,
+                     sum(grids[lv][0] * grids[lv][1] for lv in stored),
+                     fill, tile, dt)
+    return grids, data_off
+
+
 def write_cog(tiles_df: DataFrame, path: str, width: int, height: int,
               tile: int = 256, dtype: str = "float64",
               fill: float = 0.0, geotransform=None) -> None:
@@ -828,161 +837,45 @@ def write_cog(tiles_df: DataFrame, path: str, width: int, height: int,
     layout of the reference's COG driver (frmts/gtiff/cogdriver.cpp).
 
     Scale shape: with fixed-size uncompressed blocks every byte range is
-    known up front, so the driver writes only header + IFDs + fill
-    preallocation; each overview level is ONE bounded groupBy of the
-    level below (overview_tiles), and every level's tasks pwrite their
-    own disjoint ranges — no driver-side pixel traffic at any level."""
+    known up front, so the driver writes only header + IFDs (and sizes
+    the file); the overviews are raster.pyramid's average (nodata pixels
+    excluded, integer means rounded half up as GDAL's overview.cpp),
+    up to three levels per bounded shuffle, and ONE job pwrites every
+    level's tiles to their disjoint ranges — no driver-side pixel
+    traffic at any level. Pixels over absent tiles take `fill`."""
     if tile % 2:
         raise ValueError("COG tile size must be even")
     dt = np.dtype(dtype)
-    block_bytes = tile * tile * dt.itemsize
     levels = cog_levels(width, height, tile)
     n_lv = len(levels)
-    grids = [((w + tile - 1) // tile, (h + tile - 1) // tile)
-             for w, h in levels]
-    geo = geotransform is not None
-
-    # IFD region: level-0 IFD first, then overviews in resolution order
-    n_entries = [11 + (1 if lv > 0 else 0) + (2 if geo and lv == 0 else 0)
-                 for lv in range(n_lv)]
-    ifd_offs, pos = [], 8
-    for lv in range(n_lv):
-        ifd_offs.append(pos)
-        pos += _ifd_size(n_entries[lv], grids[lv][0] * grids[lv][1],
-                         geo, lv > 0)
-
-    # data region: smallest overview first, full res last
-    data_off = {}
-    for lv in range(n_lv - 1, -1, -1):
-        data_off[lv] = pos
-        pos += grids[lv][0] * grids[lv][1] * block_bytes
-
-    blobs = []
-    for lv, (w, h) in enumerate(levels):
-        nx, ny = grids[lv]
-        offs = [data_off[lv] + k * block_bytes for k in range(nx * ny)]
-        nxt = ifd_offs[lv + 1] if lv + 1 < n_lv else 0
-        entries = _cog_entries(w, h, tile, dt, offs, block_bytes,
-                               geotransform, lv > 0)
-        blobs.append(_ifd_blob(entries, ifd_offs[lv], nxt))
-
-    fill_block = np.full((tile, tile), fill, dt).tobytes()
-    with open(path, "wb") as f:
-        f.write(b"II*\x00" + struct.pack("<I", ifd_offs[0]))
-        for b in blobs:
-            f.write(b)
-        for lv in range(n_lv - 1, -1, -1):
-            for _ in range(grids[lv][0] * grids[lv][1]):
-                f.write(fill_block)
-
-    def writer(lv):
-        nx, ny = grids[lv]
-        start = data_off[lv]
-
-        def emit(batches):
-            with open(path, "r+b") as f:
-                for pdf in batches:
-                    for r in pdf.itertuples():
-                        tx, ty = int(r.tile_x), int(r.tile_y)
-                        if not (0 <= tx < nx and 0 <= ty < ny):
-                            continue
-                        arr = np.frombuffer(r.px, np.dtype(r.dtype)) \
-                            .reshape(tile, tile).astype(dt)
-                        f.seek(start + (ty * nx + tx) * block_bytes)
-                        f.write(arr.tobytes())
-                yield pd.DataFrame({"n": [1]})
-        return emit
-
-    out_schema = T.StructType([T.StructField("n", T.IntegerType())])
-    cur = tiles_df.select("tile_x", "tile_y", "dtype", "px")
-    prev = None
-    for lv in range(n_lv):
-        if lv > 0:
-            cur = overview_tiles(cur, tile, dtype, fill).persist()
-        cur.mapInPandas(writer(lv), out_schema).count()
-        # the write materialized this level's cache; the level below is
-        # no longer an input to anything — release it
-        if prev is not None:
-            prev.unpersist()
-        prev = cur if lv > 0 else None
-    if prev is not None:
-        prev.unpersist()
+    grids, data_off = _pyramid_tiff(path, levels, range(n_lv),
+                                    range(n_lv - 1, -1, -1), tile, dt, fill,
+                                    geotransform)
+    _pwrite_levels(_level_pyramid(tiles_df, n_lv - 1, True, "average",
+                                  tile, fill),
+                   path, tile, dt, grids, data_off)
 
 
 def write_ovr(tiles_df: DataFrame, path: str, width: int, height: int,
               tile: int = 256, dtype: str = "float64",
-              fill: float = 0.0) -> int:
+              fill: float = 0.0, resampling: str = "average") -> int:
     """Classic gdaladdo external-overview sidecar (<raster>.ovr,
     gcore/gdaldefaultoverviews.cpp): a TIFF whose IFD chain holds ONLY
     the reduced-resolution levels, every IFD flagged NewSubfileType=1.
-    Same distribution contract as write_cog — bounded parent-tile
-    groupBys per level, per-task pwrite of known byte ranges. Returns
-    the number of overview levels written."""
+    Same distribution contract as write_cog — the levels come from
+    raster.pyramid's reducer with any of its `resampling` modes, and one
+    job pwrites them to known byte ranges. Returns the number of
+    overview levels written."""
     if tile % 2:
         raise ValueError("overview tile size must be even")
     dt = np.dtype(dtype)
-    block_bytes = tile * tile * dt.itemsize
-    levels = cog_levels(width, height, tile)[1:]
-    if not levels:
+    levels = cog_levels(width, height, tile)
+    stored = range(1, len(levels))
+    if not stored:
         raise ValueError("raster already fits one tile; no overviews")
-    n_lv = len(levels)
-    grids = [((w + tile - 1) // tile, (h + tile - 1) // tile)
-             for w, h in levels]
-
-    ifd_offs, pos = [], 8
-    for lv in range(n_lv):
-        ifd_offs.append(pos)
-        pos += _ifd_size(12, grids[lv][0] * grids[lv][1], False, True)
-    data_off = {}
-    for lv in range(n_lv):
-        data_off[lv] = pos
-        pos += grids[lv][0] * grids[lv][1] * block_bytes
-
-    blobs = []
-    for lv, (w, h) in enumerate(levels):
-        nx, ny = grids[lv]
-        offs = [data_off[lv] + k * block_bytes for k in range(nx * ny)]
-        nxt = ifd_offs[lv + 1] if lv + 1 < n_lv else 0
-        entries = _cog_entries(w, h, tile, dt, offs, block_bytes,
-                               None, True)
-        blobs.append(_ifd_blob(entries, ifd_offs[lv], nxt))
-
-    fill_block = np.full((tile, tile), fill, dt).tobytes()
-    with open(path, "wb") as f:
-        f.write(b"II*\x00" + struct.pack("<I", ifd_offs[0]))
-        for b in blobs:
-            f.write(b)
-        for lv in range(n_lv):
-            for _ in range(grids[lv][0] * grids[lv][1]):
-                f.write(fill_block)
-
-    def writer(lv):
-        nx, _ny = grids[lv]
-        start = data_off[lv]
-
-        def emit(batches):
-            with open(path, "r+b") as f:
-                for pdf in batches:
-                    for r in pdf.itertuples():
-                        tx, ty = int(r.tile_x), int(r.tile_y)
-                        if not (0 <= tx < nx and 0 <= ty < grids[lv][1]):
-                            continue
-                        arr = np.frombuffer(r.px, np.dtype(r.dtype)) \
-                            .reshape(tile, tile).astype(dt)
-                        f.seek(start + (ty * nx + tx) * block_bytes)
-                        f.write(arr.tobytes())
-                yield pd.DataFrame({"n": [1]})
-        return emit
-
-    out_schema = T.StructType([T.StructField("n", T.IntegerType())])
-    cur = tiles_df.select("tile_x", "tile_y", "dtype", "px")
-    prev = None
-    for lv in range(n_lv):
-        cur = overview_tiles(cur, tile, dtype, fill).persist()
-        cur.mapInPandas(writer(lv), out_schema).count()
-        if prev is not None:
-            prev.unpersist()
-        prev = cur
-    if prev is not None:
-        prev.unpersist()
-    return n_lv
+    grids, data_off = _pyramid_tiff(path, levels, stored, stored, tile, dt,
+                                    fill, None)
+    _pwrite_levels(_level_pyramid(tiles_df, len(stored), False, resampling,
+                                  tile, fill),
+                   path, tile, dt, grids, data_off)
+    return len(stored)

@@ -38,6 +38,17 @@ def _pool(a):
         .mean(axis=(1, 3))
 
 
+def _read_level(spark, path, ifd, n, tile=8):
+    out = None
+    for r in read_gtiff(spark, path, tile=tile, ifd=ifd).collect():
+        px = decode_px(r.px, r.dtype, tile)
+        if out is None:
+            out = np.zeros((n, n), px.dtype)
+        out[r.tile_y * tile:(r.tile_y + 1) * tile,
+            r.tile_x * tile:(r.tile_x + 1) * tile] = px
+    return out
+
+
 def test_cog_levels_plan():
     assert cog_levels(64, 64, 8) == [(64, 64), (32, 32), (16, 16),
                                      (8, 8)]
@@ -118,6 +129,43 @@ def test_write_ovr_sidecar_levels(spark, tmp_path):
                 r.tile_x * 8:(r.tile_x + 1) * 8] = px
         np.testing.assert_array_equal(got, expect)
         expect = _pool(expect)
+
+
+def test_cog_and_ovr_uint16_overview_rounds_half_up(spark, tmp_path):
+    """Integer overviews round the 2x2 mean half up (GDAL overview.cpp
+    AVERAGE), in the COG's first overview and the .ovr's first level."""
+    from gdal_spark.sources.geotiff import write_ovr
+    rng = np.random.RandomState(11)
+    arr = rng.randint(0, 60000, (32, 32)).astype(np.uint16)
+    sums = arr.astype(np.int64).reshape(16, 2, 16, 2).sum(axis=(1, 3))
+    assert (sums % 4 == 2).any()        # exact .5 means are exercised
+    want = ((sums + 2) // 4).astype(np.uint16)
+    cog = str(tmp_path / "u.cog.tif")
+    ovr = str(tmp_path / "u.tif.ovr")
+    write_cog(_tiles_df(spark, arr, 8), cog, 32, 32, tile=8,
+              dtype="uint16")
+    write_ovr(_tiles_df(spark, arr, 8), ovr, 32, 32, tile=8,
+              dtype="uint16")
+    for path, ifd in ((cog, 1), (ovr, 0)):
+        got = _read_level(spark, path, ifd, 16)
+        assert got.dtype == np.uint16
+        np.testing.assert_array_equal(got, want)
+
+
+def test_gdaladdo_ovr_honours_resampling(spark, tmp_path):
+    from gdal_spark import cli
+    from gdal_spark.sources.geotiff import write_gtiff
+    rng = np.random.RandomState(5)
+    arr = rng.randint(0, 200, (32, 32)).astype(np.float64)
+    src = str(tmp_path / "m.tif")
+    write_gtiff(arr, src, tile=None, compression="none")
+    assert cli.main(["gdaladdo", src, "-tile", "8", "-r", "max"]) == 0
+    want = arr
+    for lv in range(2):
+        n = want.shape[0] // 2
+        want = want.reshape(n, 2, n, 2).max(axis=(1, 3))
+        np.testing.assert_array_equal(
+            _read_level(spark, src + ".ovr", lv, n), want)
 
 
 def test_gdaladdo_ovr_mode(spark, tmp_path):

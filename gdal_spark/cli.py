@@ -447,14 +447,17 @@ def _cmd_gdaladdo(argv) -> int:
         t = open_raster(spark, a.src, tile=a.tile)
         try:
             info = read_ifd(a.src)
-            w, h = info["width"], info["height"]
+            w, h, dt = info["width"], info["height"], info["dtype"]
         except Exception:
             ext = t.agg(F.max("tile_x").alias("mx"),
-                        F.max("tile_y").alias("my")).collect()[0]
+                        F.max("tile_y").alias("my"),
+                        F.first("dtype").alias("dt")).collect()[0]
             w = (int(ext.mx) + 1) * a.tile
             h = (int(ext.my) + 1) * a.tile
+            dt = ext.dt
+        # the sidecar keeps the source's sample type, as GDAL's do
         n = write_ovr(t, a.src + ".ovr", width=w, height=h,
-                      tile=a.tile, resampling=a.resampling)
+                      tile=a.tile, dtype=dt, resampling=a.resampling)
         print(json.dumps({"ovr_levels": n, "path": a.src + ".ovr"}))
         return 0
     if a.zoom is None:

@@ -1,11 +1,17 @@
 """Ranged-read IO seam (the engine's /vsi twin — port/cpl_vsil_curl.cpp
 semantics, local-file backend only in this container).
 
-Every binary format reader routes its byte access through `pread()` /
-`fsize()` so that adding a remote backend (S3 / HTTP range requests —
-what the reference's /vsicurl//vsis3 handlers do) is ONE registration
-here, not an edit in sixty format modules.  Backends are selected by
-URL scheme; bare paths and file:// go to the local os.pread backend.
+Every raster tile reader (each module emitting the raster/tiles.py
+relation) routes its byte access through `pread()` / `fsize()` — one
+pread per contiguous byte range it decodes (`pread_many` coalesces
+abutting blocks, `read_all` serves headers and whole-image formats) —
+so that adding a remote backend (S3 / HTTP range requests — what the
+reference's /vsicurl//vsis3 handlers do) is ONE registration here, not
+an edit in sixty format modules.  Backends are selected by URL scheme;
+bare paths and file:// go to the local os.pread backend, which opens a
+descriptor per call.  The record-oriented vector readers (shapefile,
+OSM PBF, DGN, S-57/ISO 8211, MIF, JSON-FG, Arrow IPC, WARC) and the
+NTv2 grid reader still read through buffered files.
 
 `PagedReader` is the driver-side metadata-walk companion: a lazily
 paged, LRU-bounded view of a file that supports the byte accesses the
@@ -76,6 +82,35 @@ def fsize(path: str) -> int:
     except KeyError:
         raise ValueError(f"no IO backend registered for {scheme}://")
     return fn(p)
+
+
+def pread_many(path: str, spans: list) -> list:
+    """Bytes for each (offset, size) span, in order. Spans that abut on
+    disk (consecutive strips or tiles) share one pread."""
+    out = [b""] * len(spans)
+    run: list = []
+
+    def flush():
+        o0 = spans[run[0]][0]
+        buf = pread(path, o0, sum(spans[i][1] for i in run))
+        for i in run:
+            o, n = spans[i]
+            out[i] = buf[o - o0:o - o0 + n]
+        run.clear()
+
+    for i in sorted(range(len(spans)), key=lambda i: spans[i][0]):
+        if run and spans[i][0] != spans[run[-1]][0] + spans[run[-1]][1]:
+            flush()
+        run.append(i)
+    if run:
+        flush()
+    return out
+
+
+def read_all(path: str) -> bytes:
+    """The whole file in one pread (small text headers, whole-image
+    formats)."""
+    return pread(path, 0, fsize(path))
 
 
 # -- paged driver-side view ---------------------------------------------------

@@ -12,6 +12,13 @@ Pixels stay packed bytes (BinaryType) because Spark has no unsigned/complex
 primitives (gcore/gdal.h:48-64 cell types); numpy inside each Arrow batch
 interprets them. Tile size is a parameter (tests use small tiles; production
 256) — partition sizing then follows spark.sql.files.maxPartitionBytes.
+
+Every format reader reaches this relation the same way: it plans one task
+row per byte range (a strip, a chunk, a message), `tiles_from_tasks` runs
+its `decode(row)` in one mapInPandas, and `decode` reads the range through
+`core.vsi.pread` and hands each decoded 2-D plane to `plane_tiles`, which
+chops it into padded `tile x tile` rows. Readers own only their planning
+and decoding; the chop, the padding and the frame plumbing live here.
 """
 
 from __future__ import annotations
@@ -42,25 +49,52 @@ def encode_px(arr: np.ndarray) -> bytes:
     return np.ascontiguousarray(arr).tobytes()
 
 
+TILE_COLS = [f.name for f in TILE_SCHEMA.fields]
+
+
+def plane_tiles(plane: np.ndarray, band: int, tx0: int, ty0: int, tile: int,
+                dtype: str, nodata: float | None = None, fill=0,
+                zoom: int = 0) -> list:
+    """TILE_SCHEMA tuples for a 2-D plane whose top-left pixel is
+    (tx0 * tile, ty0 * tile). Pixels are cast to `dtype` (the string is
+    emitted as given); right/bottom edge tiles are padded with `fill`."""
+    dt = np.dtype(dtype)
+    nod = None if nodata is None else float(nodata)
+    h, w = plane.shape
+    out = []
+    for j in range(-(-h // tile)):
+        for i in range(-(-w // tile)):
+            sub = plane[j * tile:(j + 1) * tile, i * tile:(i + 1) * tile]
+            if sub.shape != (tile, tile):
+                blk = np.full((tile, tile), fill, dt)
+                blk[:sub.shape[0], :sub.shape[1]] = sub
+                sub = blk
+            out.append((band, zoom, tx0 + i, ty0 + j, dtype, nod,
+                        np.ascontiguousarray(sub, dt).tobytes()))
+    return out
+
+
+def tiles_from_tasks(tasks: DataFrame, decode) -> DataFrame:
+    """The one task-row -> tile-table mapInPandas: `decode(row)` yields
+    TILE_SCHEMA tuples for one task; each Arrow batch becomes one frame
+    (an empty batch, an empty frame)."""
+    def run(batches):
+        for pdf in batches:
+            yield pd.DataFrame([t for row in pdf.itertuples(index=False)
+                                for t in decode(row)], columns=TILE_COLS)
+
+    return tasks.mapInPandas(run, TILE_SCHEMA)
+
+
 def raster_to_tiles(spark: SparkSession, arr: np.ndarray, zoom: int = 0,
                     band: int = 1, tile: int = TILE,
                     nodata: float | None = None) -> DataFrame:
     """Split a full in-memory raster into a tile DataFrame (fixture/ingest
     helper; pads the right/bottom edge tiles with 0 or nodata)."""
-    h, w = arr.shape
-    fill = 0 if nodata is None else nodata
-    rows = []
-    for ty in range(0, -(-h // tile)):
-        for tx in range(0, -(-w // tile)):
-            block = np.full((tile, tile), fill, dtype=arr.dtype)
-            ys, xs = ty * tile, tx * tile
-            sub = arr[ys:ys + tile, xs:xs + tile]
-            block[:sub.shape[0], :sub.shape[1]] = sub
-            rows.append((band, zoom, tx, ty, str(arr.dtype),
-                         float(nodata) if nodata is not None else None,
-                         encode_px(block)))
-    pdf = pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
-    return spark.createDataFrame(pdf, schema=TILE_SCHEMA)
+    rows = plane_tiles(arr, band, 0, 0, tile, str(arr.dtype), nodata,
+                       fill=0 if nodata is None else nodata, zoom=zoom)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=TILE_COLS),
+                                 schema=TILE_SCHEMA)
 
 
 def tiles_to_raster(df: DataFrame, tile: int = TILE) -> np.ndarray:

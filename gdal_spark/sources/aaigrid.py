@@ -28,7 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 _CHUNK = 8 << 20
 
@@ -37,15 +38,14 @@ def _scan_offsets(path: str):
     """Streaming newline scan -> (header_lines, line_byte_offsets). A line
     is a header line while its first token starts with a letter."""
     offs = [0]
-    with open(path, "rb") as f:
-        pos = 0
-        while True:
-            chunk = f.read(_CHUNK)
-            if not chunk:
-                break
-            nl = np.frombuffer(chunk, np.uint8) == 10
-            offs.extend((np.flatnonzero(nl) + pos + 1).tolist())
-            pos += len(chunk)
+    pos = 0
+    while True:
+        chunk = vsi.pread(path, pos, _CHUNK)
+        if not chunk:
+            break
+        nl = np.frombuffer(chunk, np.uint8) == 10
+        offs.extend((np.flatnonzero(nl) + pos + 1).tolist())
+        pos += len(chunk)
     if offs[-1] != pos:
         offs.append(pos)                    # file w/o trailing newline
     return offs
@@ -55,16 +55,15 @@ def parse_header(path: str):
     """-> (meta dict, data_byte_offset, data_line_offsets)."""
     offs = _scan_offsets(path)
     meta = {}
-    with open(path, "rb") as f:
-        hdr_end_idx = 0
-        for i in range(len(offs) - 1):
-            f.seek(offs[i])
-            line = f.read(offs[i + 1] - offs[i]).decode("ascii")
-            tok = line.split()
-            if not tok or not tok[0][0].isalpha():
-                break
-            meta[tok[0].lower()] = tok[1]
-            hdr_end_idx = i + 1
+    hdr_end_idx = 0
+    for i in range(len(offs) - 1):
+        line = vsi.pread(path, offs[i], offs[i + 1] - offs[i]) \
+            .decode("ascii")
+        tok = line.split()
+        if not tok or not tok[0][0].isalpha():
+            break
+        meta[tok[0].lower()] = tok[1]
+        hdr_end_idx = i + 1
     ncols, nrows = int(meta["ncols"]), int(meta["nrows"])
     dx = float(meta.get("cellsize", meta.get("dx", 1.0)))
     dy = float(meta.get("cellsize", meta.get("dy", dx)))
@@ -104,33 +103,15 @@ def read_aaigrid(spark: SparkSession, path: str, tile: int = 256,
     sdf = spark.createDataFrame(
         strips, "ty long, r0 long, r1 long, b0 long, b1 long")
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                with open(path, "rb") as f:
-                    f.seek(s.b0)
-                    raw = f.read(s.b1 - s.b0)
-                vals = np.array(raw.split(), dtype=np.float64)
-                rows_here = s.r1 - s.r0
-                arr = vals.reshape(rows_here, ncols)
-                out = []
-                fill = 0.0 if nodata is None else nodata
-                for ty in range(s.r0 // tile, -(-s.r1 // tile)):
-                    y0 = ty * tile - s.r0
-                    for tx in range(-(-ncols // tile)):
-                        block = np.full((tile, tile), fill, np.float64)
-                        sub = arr[max(0, y0):y0 + tile,
-                                  tx * tile:(tx + 1) * tile]
-                        block[:sub.shape[0], :sub.shape[1]] = sub
-                        out.append((band, 0, tx, ty, "f8", nodata,
-                                    encode_px(block)))
-                frames.append(pd.DataFrame(
-                    out, columns=[f.name for f in TILE_SCHEMA.fields]))
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                columns=[f.name for f in TILE_SCHEMA.fields])
+    fill = 0.0 if nodata is None else nodata
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA)
+    def decode(s):
+        vals = np.array(vsi.pread(path, s.b0, s.b1 - s.b0).split(),
+                        dtype=np.float64)
+        return plane_tiles(vals.reshape(s.r1 - s.r0, ncols), band, 0,
+                           s.r0 // tile, tile, "f8", nodata, fill)
+
+    return tiles_from_tasks(sdf, decode)
 
 
 def write_aaigrid(tiles: DataFrame, path: str, width_px: int,

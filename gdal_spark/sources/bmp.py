@@ -26,14 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 
 def parse_bmp_header(path: str) -> dict:
-    with open(path, "rb") as f:
-        hdr = f.read(54)
+    hdr = vsi.pread(path, 0, 54)
     if hdr[:2] != b"BM":
         raise ValueError("not a BMP file")
     data_off = struct.unpack_from("<I", hdr, 10)[0]
@@ -48,10 +46,8 @@ def parse_bmp_header(path: str) -> dict:
     palette = None
     if bpp == 8:
         n_colors = struct.unpack_from("<I", hdr, 46)[0] or 256
-        with open(path, "rb") as f:
-            f.seek(54)
-            pal = np.frombuffer(f.read(4 * n_colors),
-                                np.uint8).reshape(-1, 4)
+        pal = np.frombuffer(vsi.pread(path, 54, 4 * n_colors),
+                            np.uint8).reshape(-1, 4)
         palette = pal[:, [2, 1, 0]].copy()          # BGRX -> RGB
     return {"width": w, "height": h, "bpp": bpp, "stride": stride,
             "data_off": data_off, "bottom_up": bottom_up,
@@ -63,43 +59,28 @@ def read_bmp(spark: SparkSession, path: str, tile: int = 256):
     m = parse_bmp_header(path)
     w, h, bpp = m["width"], m["height"], m["bpp"]
     stride, data_off, bottom_up = m["stride"], m["data_off"], m["bottom_up"]
-    ntx = -(-w // tile)
     strips = [(ty, ty * tile, min(h, (ty + 1) * tile))
               for ty in range(-(-h // tile))]
     sdf = spark.createDataFrame(strips, "ty long, r0 long, r1 long")
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                rows_here = s.r1 - s.r0
-                with open(path, "rb") as f:
-                    raw = bytearray()
-                    for r in range(s.r0, s.r1):
-                        fr = (h - 1 - r) if bottom_up else r
-                        f.seek(data_off + fr * stride)
-                        raw += f.read(stride)
-                arr = np.frombuffer(bytes(raw), np.uint8) \
-                    .reshape(rows_here, stride)
-                out = []
-                if bpp == 8:
-                    planes = [(1, arr[:, :w])]
-                else:   # 24-bit BGR -> bands R,G,B = 1,2,3
-                    px = arr[:, :w * 3].reshape(rows_here, w, 3)
-                    planes = [(1, px[:, :, 2]), (2, px[:, :, 1]),
-                              (3, px[:, :, 0])]
-                for b, plane in planes:
-                    for tx in range(ntx):
-                        block = np.zeros((tile, tile), np.uint8)
-                        sub = plane[:, tx * tile:(tx + 1) * tile]
-                        block[:sub.shape[0], :sub.shape[1]] = sub
-                        out.append((b, 0, tx, s.ty, "u1", None,
-                                    encode_px(block)))
-                frames.append(pd.DataFrame(out, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+    def decode(s):
+        n = s.r1 - s.r0
+        # a bottom-up strip is one contiguous range too, stored flipped
+        first = h - s.r1 if bottom_up else s.r0
+        arr = np.frombuffer(vsi.pread(path, data_off + first * stride,
+                                      n * stride), np.uint8) \
+            .reshape(n, stride)
+        if bottom_up:
+            arr = arr[::-1]
+        if bpp == 8:
+            planes = [arr[:, :w]]
+        else:   # 24-bit BGR -> bands R,G,B = 1,2,3
+            px = arr[:, :w * 3].reshape(n, w, 3)
+            planes = [px[:, :, 2], px[:, :, 1], px[:, :, 0]]
+        for b, plane in enumerate(planes, 1):
+            yield from plane_tiles(plane, b, 0, s.ty, tile, "u1")
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA), m
+    return tiles_from_tasks(sdf, decode), m
 
 
 def write_bmp(tiles: DataFrame, path: str, *, width: int, height: int,

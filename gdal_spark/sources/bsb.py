@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 
 def parse_header(path: str) -> dict:
@@ -183,8 +183,7 @@ def read_bsb(spark: SparkSession, path: str, tile: int = 256):
     offs = meta["offsets"]
     if offs is None:
         # no valid index: one sequential scan discovers the offsets
-        with vsi.open_seekable(path) as f:
-            buf = f.read()
+        buf = vsi.read_all(path)
         offs = []
         pos = meta["first_line"]
         for line in range(hgt):
@@ -198,31 +197,15 @@ def read_bsb(spark: SparkSession, path: str, tile: int = 256):
     sdf = spark.createDataFrame(
         strips, "ty long, r0 long, r1 long, b0 long, b1 long")
 
-    def gen(batches):
-        cols = [f.name for f in TILE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            with vsi.open_seekable(path) as f:
-                for s in pdf.itertuples(index=False):
-                    f.seek(int(s.b0))
-                    buf = f.read(int(s.b1 - s.b0))
-                    rows_here = int(s.r1 - s.r0)
-                    arr = np.zeros((rows_here, w), np.float64)
-                    pos = 0
-                    for r in range(rows_here):
-                        px, pos = _decode_line(buf, pos,
-                                               int(s.r0) + r, w, depth)
-                        arr[r] = px
-                    for tx in range(-(-w // tile)):
-                        blk = np.zeros((tile, tile), np.float64)
-                        sub = arr[:, tx * tile:(tx + 1) * tile]
-                        blk[:sub.shape[0], :sub.shape[1]] = sub
-                        out.append((1, 0, tx, int(s.ty), "float64",
-                                    None, encode_px(blk)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        buf = vsi.pread(path, s.b0, s.b1 - s.b0)
+        arr = np.zeros((s.r1 - s.r0, w), np.float64)
+        pos = 0
+        for r in range(s.r1 - s.r0):
+            arr[r], pos = _decode_line(buf, pos, s.r0 + r, w, depth)
+        return plane_tiles(arr, 1, 0, s.ty, tile, "float64")
 
-    return sdf.mapInPandas(gen, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 def _encode_line(px: np.ndarray, line: int, depth: int) -> bytes:

@@ -40,10 +40,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 from .rawraster import _plan_and_read
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
 
 _STRIP_OUT = T.StructType([T.StructField("part", T.LongType()),
                            T.StructField("n", T.LongType())])
@@ -98,37 +97,20 @@ def _read_row_strips(spark: SparkSession, path: str, *, samples: int,
                               byte_order=1 if dtype.startswith(">")
                               else 0, nodata=nodata, tile=tile)
     item = np.dtype(dtype).itemsize
-    ntx = -(-samples // tile)
     strips = [(ty, ty * tile, min(lines, (ty + 1) * tile))
               for ty in range(-(-lines // tile))]
     sdf = spark.createDataFrame(strips, "ty long, r0 long, r1 long")
+    base = np.dtype(dtype).str[1:]
+    fill = 0 if nodata is None else nodata
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                rows_here = s.r1 - s.r0
-                off = offset + (lines - s.r1) * samples * item
-                with open(path, "rb") as f:
-                    f.seek(off)
-                    raw = f.read(rows_here * samples * item)
-                arr = np.frombuffer(raw, dtype=dtype).reshape(
-                    rows_here, samples)[::-1]
-                arr = arr.astype(arr.dtype.newbyteorder("="))
-                out = []
-                fill = 0 if nodata is None else nodata
-                base = np.dtype(dtype).str[1:]
-                for tx in range(ntx):
-                    block = np.full((tile, tile), fill, dtype=base)
-                    sub = arr[:, tx * tile:(tx + 1) * tile]
-                    block[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((1, 0, tx, int(s.ty), base, nodata,
-                                encode_px(block)))
-                frames.append(pd.DataFrame(out, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+    def decode(s):
+        n = s.r1 - s.r0
+        raw = vsi.pread(path, offset + (lines - s.r1) * samples * item,
+                        n * samples * item)
+        arr = np.frombuffer(raw, dtype=dtype).reshape(n, samples)[::-1]
+        return plane_tiles(arr, 1, 0, s.ty, tile, base, nodata, fill)
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA)
+    return tiles_from_tasks(sdf, decode)
 
 
 # ------------------------------------------------------------- SRTMHGT
@@ -141,7 +123,7 @@ def read_srtmhgt(spark: SparkSession, path: str, tile: int = 256):
     """SRTM .hgt -> (tile table, meta). Square big-endian int16, size
     inferred from the byte count; SW corner from the N/S E/W name when
     present (srtmhgtdataset.cpp:108 reads it the same way)."""
-    size = os.path.getsize(path)
+    size = vsi.fsize(path)
     n = int(math.isqrt(size // 2))
     if n * n * 2 != size:
         raise ValueError(f"{path}: not a square int16 raster ({size} B)")
@@ -223,8 +205,7 @@ def write_bt(tiles: DataFrame, path: str, *, width: int, height: int,
 def read_bt(spark: SparkSession, path: str, tile: int = 256):
     """BT 1.3 -> (tile table, meta): column-strip tasks transpose the
     south->north columns back into row-major tiles."""
-    with open(path, "rb") as f:
-        hdr = f.read(256)
+    hdr = vsi.pread(path, 0, 256)
     if hdr[:10] != _BT_MAGIC:
         raise ValueError(f"{path}: not a BT 1.3 file")
     (width, height, item, is_float, _hu, _zone, _datum, left, right,
@@ -235,31 +216,15 @@ def read_bt(spark: SparkSession, path: str, tile: int = 256):
     strips = [(tx, tx * tile, min(width, (tx + 1) * tile))
               for tx in range(-(-width // tile))]
     sdf = spark.createDataFrame(strips, "tx long, c0 long, c1 long")
-    nty = -(-height // tile)
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                cols_here = s.c1 - s.c0
-                with open(path, "rb") as f:
-                    f.seek(256 + s.c0 * height * item)
-                    raw = f.read(cols_here * height * item)
-                # (cols, rows S->N) -> row-major top-down (rows, cols)
-                block = np.frombuffer(raw, dtype=dtype).reshape(
-                    cols_here, height).T[::-1]
-                out = []
-                for ty in range(nty):
-                    cell = np.zeros((tile, tile), dtype=dtype)
-                    sub = block[ty * tile:(ty + 1) * tile, :]
-                    cell[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((1, 0, int(s.tx), ty, dtype, None,
-                                encode_px(cell)))
-                frames.append(pd.DataFrame(out, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+    def decode(s):
+        n = s.c1 - s.c0
+        raw = vsi.pread(path, 256 + s.c0 * height * item, n * height * item)
+        # (cols, rows S->N) -> row-major top-down (rows, cols)
+        cols = np.frombuffer(raw, dtype=dtype).reshape(n, height)
+        return plane_tiles(cols.T[::-1], 1, s.tx, 0, tile, dtype)
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 # ----------------------------------------------------------------- ERS
@@ -301,8 +266,7 @@ def read_ers(spark: SparkSession, path: str, tile: int = 256):
     """ERMapper .ers header + sibling BIL data file -> tile table."""
     ers_path = path if path.lower().endswith(".ers") else path + ".ers"
     data_path = ers_path[:-4]
-    with open(ers_path) as f:
-        meta = _parse_ers(f.read())
+    meta = _parse_ers(vsi.read_all(ers_path).decode())
     ri = "datasetheader.rasterinfo."
     dtype = _ERS_CELLTYPE[meta[ri + "celltype"].lower()]
     nodata = (float(meta[ri + "nullcellvalue"])
@@ -357,11 +321,10 @@ def read_idrisi(spark: SparkSession, path: str, tile: int = 256):
     """IDRISI .rst + .rdc companion -> tile table (little-endian BSQ)."""
     stem = os.path.splitext(path)[0]
     meta = {}
-    with open(stem + ".rdc") as f:
-        for line in f:
-            if ":" in line:
-                k, v = line.split(":", 1)
-                meta[k.strip().lower()] = v.strip()
+    for line in vsi.read_all(stem + ".rdc").decode().splitlines():
+        if ":" in line:
+            k, v = line.split(":", 1)
+            meta[k.strip().lower()] = v.strip()
     dtype = _RDC_DTYPE[meta["data type"].lower()]
     nodata = None
     if meta.get("flag value", "none").lower() not in ("none", ""):
@@ -423,11 +386,10 @@ def read_saga(spark: SparkSession, path: str, tile: int = 256):
     flipped-strip planner."""
     stem = os.path.splitext(path)[0]
     meta = {}
-    with open(stem + ".sgrd") as f:
-        for line in f:
-            if "=" in line:
-                k, v = line.split("=", 1)
-                meta[k.strip().upper()] = v.strip()
+    for line in vsi.read_all(stem + ".sgrd").decode().splitlines():
+        if "=" in line:
+            k, v = line.split("=", 1)
+            meta[k.strip().upper()] = v.strip()
     dtype = _SAGA_DTYPE[meta["DATAFORMAT"].lower()]
     if meta.get("BYTEORDER_BIG", "FALSE").upper() == "TRUE":
         dtype = ">" + dtype

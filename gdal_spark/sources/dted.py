@@ -25,9 +25,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
-_COLS = [f.name for f in TILE_SCHEMA.fields]
 _DATA_OFF = 80 + 648 + 2700
 
 
@@ -42,8 +42,7 @@ def _dddmmssh(deg: float, is_lat: bool) -> bytes:
 
 
 def parse_dted_header(path: str) -> dict:
-    with open(path, "rb") as f:
-        uhl = f.read(80)
+    uhl = vsi.pread(path, 0, 80)
     if uhl[:4] != b"UHL1":
         raise ValueError("not a DTED file (no UHL1)")
     def _ang(b):
@@ -73,39 +72,23 @@ def read_dted(spark: SparkSession, path: str, tile: int = 256):
     strips = [(tx, tx * tile, min(ncols, (tx + 1) * tile))
               for tx in range(-(-ncols // tile))]
     sdf = spark.createDataFrame(strips, "tx long, c0 long, c1 long")
-    nty = -(-nrows // tile)
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                cols_here = s.c1 - s.c0
-                with open(path, "rb") as f:
-                    f.seek(_DATA_OFF + s.c0 * rec)
-                    raw = f.read(cols_here * rec)
-                recs = np.frombuffer(raw, np.uint8).reshape(cols_here, rec)
-                # sentinel is the C octal literal 0252 = 0xAA (dted_api.c)
-                if not (recs[:, 0] == 0xAA).all():
-                    raise ValueError("bad DTED record sentinel")
-                samp = recs[:, 8:8 + 2 * nrows]
-                v = (samp[:, 0::2].astype(np.uint16) << 8) \
-                    | samp[:, 1::2].astype(np.uint16)
-                mag = (v & 0x7FFF).astype(np.int32)
-                val = np.where(v & 0x8000, -mag, mag)
-                # columns x south->north rows -> north-up (nrows, ncols)
-                plane = val.T[::-1, :]
-                out = []
-                for ty in range(nty):
-                    r0, r1 = ty * tile, min(nrows, (ty + 1) * tile)
-                    block = np.zeros((tile, tile), np.int32)
-                    block[:r1 - r0, :cols_here] = plane[r0:r1, :]
-                    out.append((1, 0, int(s.tx), ty, "i4", None,
-                                encode_px(block)))
-                frames.append(pd.DataFrame(out, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+    def decode(s):
+        n = s.c1 - s.c0
+        recs = np.frombuffer(vsi.pread(path, _DATA_OFF + s.c0 * rec,
+                                       n * rec), np.uint8).reshape(n, rec)
+        # sentinel is the C octal literal 0252 = 0xAA (dted_api.c)
+        if not (recs[:, 0] == 0xAA).all():
+            raise ValueError("bad DTED record sentinel")
+        samp = recs[:, 8:8 + 2 * nrows]
+        v = (samp[:, 0::2].astype(np.uint16) << 8) \
+            | samp[:, 1::2].astype(np.uint16)
+        mag = (v & 0x7FFF).astype(np.int32)
+        val = np.where(v & 0x8000, -mag, mag)
+        # columns x south->north rows -> north-up (nrows, ncols)
+        return plane_tiles(val.T[::-1, :], 1, s.tx, 0, tile, "i4")
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA), m
+    return tiles_from_tasks(sdf, decode), m
 
 
 def write_dted(tiles: DataFrame, path: str, *, ncols: int, nrows: int,

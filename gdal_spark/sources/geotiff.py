@@ -30,7 +30,7 @@ from pyspark.sql import types as T
 
 from ..core import vsi
 from ..raster.pyramid import overviews
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 # TIFF tag ids
 W, H, BITS, COMP, PHOTO = 256, 257, 258, 259, 262
@@ -399,53 +399,34 @@ def read_gtiff(spark: SparkSession, path: str, tile: int = 256,
     offsets = info["offsets"]
     counts = info["counts"]
     bc = spark.sparkContext.broadcast(plan)
-    cols = [f.name for f in TILE_SCHEMA.fields]
+    dt = info["dtype"]
 
-    def parse(batches):
-        pl = bc.value
-        for pdf in batches:
-            frames = []
-            with vsi.open_seekable(path) as fh:
-                for r in pdf["row"]:
-                    r = int(r)
-                    ry0 = r * tile
-                    slab_h = min(tile, height - ry0)
-                    slab = np.zeros((slab_h, width, nsamp),
-                                    np.dtype(info["dtype"]))
-                    for k, y0, h, x0, w, smp in pl[r]:
-                        fh.seek(offsets[k])
-                        arr = _decode_block(fh.read(counts[k]), info,
-                                            h, w,
-                                            samples=1 if smp >= 0
-                                            else None)
-                        if arr.ndim == 2:
-                            arr = arr[:, :, None]
-                        # block may overhang the raster edge (tiled pad)
-                        sy0 = max(y0, ry0)
-                        sy1 = min(y0 + h, ry0 + slab_h, height)
-                        sx1 = min(x0 + w, width)
-                        tgt = slab[sy0 - ry0:sy1 - ry0, x0:sx1]
-                        piece = arr[sy0 - y0:sy1 - y0, :sx1 - x0]
-                        if smp >= 0:
-                            tgt[:, :, smp:smp + 1] = piece
-                        else:
-                            tgt[:] = piece
-                    out = []
-                    for tx in range((width + tile - 1) // tile):
-                        xw = min(tile, width - tx * tile)
-                        for si in range(nsamp):
-                            px = np.zeros((tile, tile),
-                                          np.dtype(info["dtype"]))
-                            px[:slab_h, :xw] = \
-                                slab[:, tx * tile:tx * tile + xw, si]
-                            out.append((band + si, 0, tx, r,
-                                        info["dtype"], nodata,
-                                        encode_px(px)))
-                    frames.append(pd.DataFrame(out, columns=cols))
-            yield pd.concat(frames) if frames else \
-                pd.DataFrame(columns=cols)
+    def decode(s):
+        ry0 = s.row * tile
+        slab = np.zeros((min(tile, height - ry0), width, nsamp), np.dtype(dt))
+        todo = bc.value[s.row]
+        raws = vsi.pread_many(path, [(offsets[b[0]], counts[b[0]])
+                                     for b in todo])
+        for raw, (_, y0, h, x0, w, smp) in zip(raws, todo):
+            arr = _decode_block(raw, info, h, w,
+                                samples=1 if smp >= 0 else None)
+            if arr.ndim == 2:
+                arr = arr[:, :, None]
+            # block may overhang the raster edge (tiled pad)
+            sy0 = max(y0, ry0)
+            sy1 = min(y0 + h, ry0 + slab.shape[0], height)
+            sx1 = min(x0 + w, width)
+            tgt = slab[sy0 - ry0:sy1 - ry0, x0:sx1]
+            piece = arr[sy0 - y0:sy1 - y0, :sx1 - x0]
+            if smp >= 0:
+                tgt[:, :, smp:smp + 1] = piece
+            else:
+                tgt[:] = piece
+        for si in range(nsamp):
+            yield from plane_tiles(slab[:, :, si], band + si, 0, s.row, tile,
+                                   dt, nodata)
 
-    return rdf.mapInPandas(parse, TILE_SCHEMA)
+    return tiles_from_tasks(rdf, decode)
 
 
 # ---------------------------------------------------------------------------
@@ -496,12 +477,8 @@ def write_gtiff(arr: np.ndarray, path: str, tile: int | None = None,
         for y0 in range(0, height, rps):
             blocks.append(prep(arr[y0:y0 + rps]))
     else:
-        for ty in range(0, height, tile):
-            for tx in range(0, width, tile):
-                blk = np.zeros((tile, tile), dt)
-                sub = arr[ty:ty + tile, tx:tx + tile]
-                blk[:sub.shape[0], :sub.shape[1]] = sub
-                blocks.append(prep(blk))
+        for t in plane_tiles(arr, 1, 0, 0, tile, dt.str):
+            blocks.append(prep(np.frombuffer(t[-1], dt).reshape(tile, tile)))
 
     data_start = 8
     offs, cnts = [], []

@@ -31,9 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
@@ -253,30 +251,17 @@ def read_gif(spark: SparkSession, path: str, tile: int = 256):
     nodata = float(m["transparent"]) if m["transparent"] is not None \
         else None
     sdf = spark.createDataFrame([(path,)], "path string")
-    ntx, nty = -(-w // tile), -(-h // tile)
 
-    def parse(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                mm = parse_gif(p)
-                px = lzw_decode(mm["lzw"], mm["min_code"],
-                                w * h).reshape(h, w)
-                if mm["interlace"]:
-                    disp = np.empty_like(px)
-                    disp[deinterlace_order(h)] = px
-                    px = disp
-                out = []
-                for ty in range(nty):
-                    for tx in range(ntx):
-                        block = np.zeros((tile, tile), np.uint8)
-                        sub = px[ty * tile:(ty + 1) * tile,
-                                 tx * tile:(tx + 1) * tile]
-                        block[:sub.shape[0], :sub.shape[1]] = sub
-                        out.append((1, 0, tx, ty, "u1", nodata,
-                                    encode_px(block)))
-                yield pd.DataFrame(out, columns=_COLS)
+    def decode(s):
+        mm = parse_gif(s.path)
+        px = lzw_decode(mm["lzw"], mm["min_code"], w * h).reshape(h, w)
+        if mm["interlace"]:
+            disp = np.empty_like(px)
+            disp[deinterlace_order(h)] = px
+            px = disp
+        return plane_tiles(px, 1, 0, 0, tile, "u1", nodata)
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA), {
+    return tiles_from_tasks(sdf, decode), {
         "width": w, "height": h, "palette": m["palette"],
         "nodata": nodata, "interlace": m["interlace"]}
 

@@ -30,9 +30,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from ..raster.tiles import TILE_SCHEMA, encode_px
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
+from ..core import vsi
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 
 # ---------------------------------------------------------------------------
@@ -92,21 +91,20 @@ def _s2(b: bytes, off: int) -> int:
 def scan_messages(path: str):
     """Driver-side index: [(offset, length)] per GRIB1 message."""
     out = []
-    with open(path, "rb") as f:
-        off = 0
-        while True:
-            f.seek(off)
-            head = f.read(8)
-            if len(head) < 8:
-                break
-            if head[:4] != b"GRIB":
-                off += 1          # tolerate inter-message padding
-                continue
-            if head[7] != 1:
-                raise ValueError(f"GRIB edition {head[7]} unsupported")
-            ln = _i3(head, 4)
-            out.append((off, ln))
-            off += ln
+    buf = vsi.PagedReader(path)
+    off = 0
+    while True:
+        head = buf[off:off + 8]
+        if len(head) < 8:
+            break
+        if head[:4] != b"GRIB":
+            off += 1          # tolerate inter-message padding
+            continue
+        if head[7] != 1:
+            raise ValueError(f"GRIB edition {head[7]} unsupported")
+        ln = _i3(head, 4)
+        out.append((off, ln))
+        off += ln
     return out
 
 
@@ -171,44 +169,21 @@ def read_grib(spark: SparkSession, path: str, tile: int = 256):
     """-> (tile table, [meta per message]); band = message index + 1."""
     msgs = scan_messages(path)
     metas = []
-    with open(path, "rb") as f:
-        for off, ln in msgs:          # headers only: PDS+GDS, no BDS math
-            f.seek(off)
-            head = f.read(min(ln, 4096))
-            _vals_unused, meta = None, None
-            # light parse for meta (sections are small; reuse the full
-            # parser on the header slice only when it fits, else executor)
-            metas.append(None if len(head) < ln else
-                         parse_message(head)[1])
+    for off, ln in msgs:          # headers only: PDS+GDS, no BDS math
+        head = vsi.pread(path, off, min(ln, 4096))
+        # light parse for meta (sections are small; reuse the full
+        # parser on the header slice only when it fits, else executor)
+        metas.append(None if len(head) < ln else parse_message(head)[1])
     idx = spark.createDataFrame(
         pd.DataFrame([(i, off, ln) for i, (off, ln) in enumerate(msgs)],
                      columns=["msg", "off", "len"]))
     idx = idx.repartition(min(len(msgs), 32) or 1)
 
-    def gen(batches):
-        for pdf in batches:
-            frames = []
-            with open(path, "rb") as f:
-                for msg, off, ln in zip(pdf["msg"], pdf["off"],
-                                        pdf["len"]):
-                    f.seek(int(off))
-                    vals, _meta = parse_message(f.read(int(ln)))
-                    nj, ni = vals.shape
-                    rows = []
-                    for ty in range(-(-nj // tile)):
-                        for tx in range(-(-ni // tile)):
-                            blk = np.zeros((tile, tile), np.float64)
-                            sub = vals[ty * tile:(ty + 1) * tile,
-                                       tx * tile:(tx + 1) * tile]
-                            blk[:sub.shape[0], :sub.shape[1]] = sub
-                            rows.append((int(msg) + 1, 0, tx, ty,
-                                         "float64", None,
-                                         encode_px(blk)))
-                    frames.append(pd.DataFrame(rows, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+    def decode(s):
+        vals, _meta = parse_message(vsi.pread(path, s.off, s.len))
+        return plane_tiles(vals, s.msg + 1, 0, 0, tile, "float64")
 
-    return idx.mapInPandas(gen, TILE_SCHEMA), metas
+    return tiles_from_tasks(idx, decode), metas
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..core import vsi
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 NODATA = 9999.0
 
@@ -47,24 +48,23 @@ def scan_messages(path: str):
     """Driver-side index: [(offset, length)] per GRIB2 message (edition
     1 messages in mixed files are skipped here; grib.py reads those)."""
     out = []
-    with open(path, "rb") as f:
-        off = 0
-        while True:
-            f.seek(off)
-            head = f.read(16)
-            if len(head) < 16:
-                break
-            if head[:4] != b"GRIB":
-                off += 1
-                continue
-            if head[7] == 2:
-                ln = _u(head, 8, 8)
-                out.append((off, ln))
-                off += ln
-            elif head[7] == 1:
-                off += _u(head, 4, 3)      # skip edition-1 message
-            else:
-                off += 1
+    buf = vsi.PagedReader(path)
+    off = 0
+    while True:
+        head = buf[off:off + 16]
+        if len(head) < 16:
+            break
+        if head[:4] != b"GRIB":
+            off += 1
+            continue
+        if head[7] == 2:
+            ln = _u(head, 8, 8)
+            out.append((off, ln))
+            off += ln
+        elif head[7] == 1:
+            off += _u(head, 4, 3)      # skip edition-1 message
+        else:
+            off += 1
     return out
 
 
@@ -360,44 +360,20 @@ def read_grib2(spark: SparkSession, path: str, tile: int = 256):
     # decode lazily on executors)
     metas = []
     band_plan = []                       # (band, msg_off, msg_len, field_i)
-    with open(path, "rb") as f:
-        for off, ln in msgs:
-            f.seek(off)
-            buf = f.read(ln)
-            flds = parse_fields(buf)
-            for i, (_g, m) in enumerate(flds):
-                band_plan.append((len(metas) + 1, off, ln, i))
-                metas.append(m)
+    for off, ln in msgs:
+        for i, (_g, m) in enumerate(parse_fields(vsi.pread(path, off, ln))):
+            band_plan.append((len(metas) + 1, off, ln, i))
+            metas.append(m)
     idx = spark.createDataFrame(
         pd.DataFrame(band_plan, columns=["band", "off", "len", "fi"]))
     idx = idx.repartition(min(len(band_plan), 32) or 1)
-    cols = [f.name for f in TILE_SCHEMA.fields]
 
-    def gen(batches):
-        for pdf in batches:
-            frames = []
-            with open(path, "rb") as f:
-                for band, off, ln, fi in zip(pdf["band"], pdf["off"],
-                                             pdf["len"], pdf["fi"]):
-                    f.seek(int(off))
-                    grid, m = parse_fields(f.read(int(ln)))[int(fi)]
-                    nj, ni = grid.shape
-                    rows = []
-                    nod = m.get("nodata")
-                    for ty in range(-(-nj // tile)):
-                        for tx in range(-(-ni // tile)):
-                            blk = np.zeros((tile, tile), np.float64)
-                            sub = grid[ty * tile:(ty + 1) * tile,
-                                       tx * tile:(tx + 1) * tile]
-                            blk[:sub.shape[0], :sub.shape[1]] = sub
-                            rows.append((int(band), 0, tx, ty,
-                                         "float64", nod,
-                                         encode_px(blk)))
-                    frames.append(pd.DataFrame(rows, columns=cols))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        grid, m = parse_fields(vsi.pread(path, s.off, s.len))[s.fi]
+        return plane_tiles(grid, s.band, 0, 0, tile, "float64",
+                           m.get("nodata"))
 
-    return idx.mapInPandas(gen, TILE_SCHEMA), metas
+    return tiles_from_tasks(idx, decode), metas
 
 
 # ---------------------------------------------------------------------------

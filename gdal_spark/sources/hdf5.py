@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 _SIG = b"\x89HDF\r\n\x1a\n"
 UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -447,53 +447,35 @@ def read_hdf5(spark: SparkSession, path: str, dataset: str | None = None,
     if cd2 is not None and len(cd2) == 1:
         cd2 = [1, cd2[0]]
     cont_addr = info["layout"][1] if not chunked else 0
-    cols = [f.name for f in TILE_SCHEMA.fields]
+    dt = np.dtype(dts)
 
-    def gen(batches):
-        dt = np.dtype(dts)
-        for pdf in batches:
-            out = []
-            for s in pdf.itertuples(index=False):
-                ty = int(s.ty)
-                r0 = ty * tile
-                rows_here = min(h - r0, tile)
-                strip = np.zeros((rows_here, w), np.float64)
-                if chunked:
-                    for addr, csize, fmask, oy, ox in zip(
-                            s.addr, s.csize, s.fmask, s.oy, s.ox):
-                        raw = _apply_filters(
-                            vsi.pread(path, int(addr), int(csize)),
-                            filters, int(fmask), dt.itemsize,
-                            int(np.prod(cd2)))
-                        blk = np.frombuffer(
-                            raw, dt,
-                            count=cd2[0] * cd2[1]).reshape(cd2)
-                        # intersect chunk rows with this strip
-                        y0 = max(int(oy), r0)
-                        y1 = min(int(oy) + cd2[0], r0 + rows_here,
-                                 h)
-                        x0 = int(ox)
-                        x1 = min(x0 + cd2[1], w)
-                        strip[y0 - r0:y1 - r0, x0:x1] = \
-                            blk[y0 - int(oy):y1 - int(oy),
-                                :x1 - x0]
-                elif cont_addr != UNDEF:
-                    raw = vsi.pread(path,
-                                    cont_addr + r0 * w * dt.itemsize,
-                                    rows_here * w * dt.itemsize)
-                    strip[:, :] = np.frombuffer(
-                        raw, dt,
-                        count=rows_here * w).reshape(rows_here, w)
-                for tx in range(-(-w // tile)):
-                    blk = np.zeros((tile, tile), np.float64)
-                    sub = strip[:, tx * tile:(tx + 1) * tile]
-                    blk[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((1, 0, tx, ty, "float64", None,
-                                encode_px(blk)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        r0 = s.ty * tile
+        rows_here = min(h - r0, tile)
+        strip = np.zeros((rows_here, w), np.float64)
+        if chunked:
+            raws = vsi.pread_many(path, [(int(a), int(c)) for a, c in
+                                         zip(s.addr, s.csize)])
+            for raw, fmask, oy, ox in zip(raws, s.fmask, s.oy, s.ox):
+                raw = _apply_filters(raw, filters, int(fmask), dt.itemsize,
+                                     int(np.prod(cd2)))
+                blk = np.frombuffer(raw, dt,
+                                    count=cd2[0] * cd2[1]).reshape(cd2)
+                # intersect chunk rows with this strip
+                y0 = max(int(oy), r0)
+                y1 = min(int(oy) + cd2[0], r0 + rows_here, h)
+                x0 = int(ox)
+                x1 = min(x0 + cd2[1], w)
+                strip[y0 - r0:y1 - r0, x0:x1] = \
+                    blk[y0 - int(oy):y1 - int(oy), :x1 - x0]
+        elif cont_addr != UNDEF:
+            raw = vsi.pread(path, cont_addr + r0 * w * dt.itemsize,
+                            rows_here * w * dt.itemsize)
+            strip[:, :] = np.frombuffer(
+                raw, dt, count=rows_here * w).reshape(rows_here, w)
+        return plane_tiles(strip, 1, 0, s.ty, tile, "float64")
 
-    return idx.mapInPandas(gen, TILE_SCHEMA), hdf
+    return tiles_from_tasks(idx, decode), hdf
 
 
 # ---------------------------------------------------------------------------
@@ -644,8 +626,6 @@ def read_hdf5_multidim(spark: SparkSession, path: str,
     applies.  The driver walks only bounded metadata; (combo, strip)
     tasks pread their byte ranges executor-side.  Contiguous and
     chunked (deflate/shuffle) layouts both supported."""
-    from ..raster.tiles import encode_px as _enc
-
     hdf = HDF5File(path)
     if dataset is None:
         nd = [k for k, v in hdf.datasets.items()
@@ -755,12 +735,9 @@ def read_hdf5_multidim(spark: SparkSession, path: str,
                 # UNDEF address: unallocated dataset reads as fill 0
                 d0 = combo[0] if nlead >= 1 else None
                 d1 = combo[1] if nlead >= 2 else None
-                for tx in range(-(-w // tile)):
-                    blk = np.zeros((tile, tile), np.float64)
-                    sub = strip[:, tx * tile:(tx + 1) * tile]
-                    blk[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((dataset, d0, d1, tx, ty, "float64",
-                                _enc(blk)))
+                out += [(dataset, d0, d1, tx, ty, dt_, px)
+                        for _, _, tx, ty, dt_, _, px in plane_tiles(
+                            strip, 1, 0, ty, tile, "float64")]
             yield (pd.DataFrame(out, columns=cols) if out
                    else pd.DataFrame(columns=cols))
 

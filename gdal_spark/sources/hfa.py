@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 # pixelType enum order (Eimg_Layer e13) -> (numpy dtype or None, bits)
 _PIX = [("u1", 1), ("u2", 2), ("u4", 4), (np.uint8, 8), (np.int8, 8),
@@ -417,31 +417,20 @@ def read_hfa(spark: SparkSession, path: str, tile: int = 256):
         rows, columns=["band", "file", "off", "size", "valid", "comp",
                        "bx", "by", "bw", "bh", "pt", "w", "h"]))
     idx = idx.repartition(min(len(rows), 32) or 1)
-    cols = [f.name for f in TILE_SCHEMA.fields]
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                raw = vsi.pread(r.file, int(r.off), int(r.size))
-                info = {"bw": int(r.bw), "bh": int(r.bh),
-                        "pt": int(r.pt)}
-                arr = _decode_block(raw, info, bool(r.comp),
-                                    bool(r.valid))
-                # clip partial edge blocks to the raster extent
-                blk = np.zeros((int(r.bh), int(r.bw)), np.float64)
-                y0, x0 = int(r.by) * int(r.bh), int(r.bx) * int(r.bw)
-                hh = min(int(r.bh), int(r.h) - y0)
-                ww = min(int(r.bw), int(r.w) - x0)
-                if hh <= 0 or ww <= 0:
-                    continue
-                blk[:hh, :ww] = arr[:hh, :ww]
-                out.append((int(r.band), 0, int(r.bx), int(r.by),
-                            "float64", None, encode_px(blk)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(r):
+        # clip partial edge blocks to the raster extent
+        hh = min(r.bh, r.h - r.by * r.bh)
+        ww = min(r.bw, r.w - r.bx * r.bw)
+        if hh <= 0 or ww <= 0:
+            return []
+        arr = _decode_block(vsi.pread(r.file, r.off, r.size),
+                            {"bw": r.bw, "bh": r.bh, "pt": r.pt},
+                            bool(r.comp), bool(r.valid))
+        return plane_tiles(arr[:hh, :ww], r.band, r.bx, r.by, r.bw,
+                           "float64")
 
-    return idx.mapInPandas(gen, TILE_SCHEMA), hfa
+    return tiles_from_tasks(idx, decode), hfa
 
 
 # ---------------------------------------------------------------------------

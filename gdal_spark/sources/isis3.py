@@ -24,9 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from ..raster.tiles import TILE_SCHEMA, encode_px
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
+from ..core import vsi
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 _PTYPES = {"UNSIGNEDBYTE": ("u1", 0.0), "SIGNEDWORD": ("i2", -32768.0),
            "REAL": ("f4", -3.4028226550889045e38)}
@@ -86,9 +85,8 @@ def read_isis3(spark: SparkSession, path: str):
     """.cub / detached .lbl -> (tile table, meta). Tile-format cores map
     one stored tile -> one engine tile (task-parallel preads);
     BandSequential cores read line strips."""
-    with open(path, "rb") as f:
-        head = f.read(1 << 20)
-    lbl = parse_pvl(head.decode("ascii", errors="replace"))
+    lbl = parse_pvl(vsi.pread(path, 0, 1 << 20)
+                    .decode("ascii", errors="replace"))
     cube = lbl.get("IsisCube")
     if cube is None or "Core" not in cube:
         raise ValueError("not an ISIS3 cube (no IsisCube/Core)")
@@ -133,26 +131,14 @@ def read_isis3(spark: SparkSession, path: str):
         sdf = spark.createDataFrame(
             jobs, "band int, tx long, ty long, off long")
 
-        def parse(batches):
-            for pdf in batches:
-                out = []
-                for s in pdf.itertuples(index=False):
-                    with open(data_path, "rb") as f:
-                        f.seek(s.off)
-                        raw = f.read(tilebytes)
-                    if len(raw) < tilebytes:
-                        raw += b"\0" * (tilebytes - len(raw))
-                    arr = np.frombuffer(raw, dtype=dt)
-                    if dt.byteorder == ">":
-                        arr = arr.astype(dt.newbyteorder("="))
-                    block = np.ascontiguousarray(
-                        arr.reshape(tl, tsamp)).astype(out_dt)
-                    out.append((s.band, 0, s.tx, s.ty, out_dt,
-                                null_val, encode_px(block)))
-                yield pd.DataFrame(out, columns=_COLS)
+        def decode(s):
+            raw = vsi.pread(data_path, s.off, tilebytes)
+            arr = np.frombuffer(raw.ljust(tilebytes, b"\0"), dtype=dt)
+            return plane_tiles(arr.reshape(tl, tsamp), s.band, s.tx, s.ty,
+                               tsamp, out_dt, null_val)
 
         meta["tile"] = tsamp
-        return sdf.mapInPandas(parse, TILE_SCHEMA), meta
+        return tiles_from_tasks(sdf, decode), meta
 
     from .rawraster import _plan_and_read
     tiles = _plan_and_read(

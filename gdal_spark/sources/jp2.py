@@ -22,12 +22,11 @@ import struct
 import tempfile
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core import vsi
 from ..raster import j2k
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 _GEOTIFF_UUID = bytes([0xB1, 0x4B, 0xF8, 0xBD, 0x08, 0x3D, 0x4B, 0x43,
                        0xA5, 0xAE, 0x8C, 0xD7, 0xD5, 0xA6, 0xCE, 0x03])
@@ -150,108 +149,69 @@ def read_jp2(spark: SparkSession, path: str, tile: int = 256):
                or (siz["xtsiz"] % tile == 0 and siz["ytsiz"] % tile == 0
                    and (siz["xtosiz"] - siz["xosiz"]) % tile == 0
                    and (siz["ytosiz"] - siz["yosiz"]) % tile == 0))
+    dt = ("i4" if siz["comps"][0]["signed"]
+          else ("u2" if meta["depth"] > 8 else "u1"))
     if not aligned:
-        one = spark.createDataFrame([(0,)], "i long")
+        def decode_whole(s):
+            arr = j2k.decode_j2k(vsi.pread(path, s.off, s.size))
+            for c in range(arr.shape[0]):
+                yield from plane_tiles(arr[c], c + 1, 0, 0, tile, dt)
 
-        def gen_whole(batches):
-            for chunk in batches:
-                out = []
-                for _ in chunk.itertuples(index=False):
-                    raw = vsi.pread(path, cs_off, cs_len)
-                    arr = j2k.decode_j2k(raw)
-                    dt = ("i4" if siz["comps"][0]["signed"]
-                          else ("u2" if meta["depth"] > 8 else "u1"))
-                    for c in range(arr.shape[0]):
-                        plane = arr[c].astype(np.dtype(dt))
-                        h, w = plane.shape
-                        for by in range(-(-h // tile)):
-                            for bx in range(-(-w // tile)):
-                                blk = np.zeros((tile, tile),
-                                               plane.dtype)
-                                sub = plane[by * tile:(by + 1) * tile,
-                                            bx * tile:(bx + 1) * tile]
-                                blk[:sub.shape[0], :sub.shape[1]] = sub
-                                out.append((c + 1, 0, bx, by, dt, None,
-                                            encode_px(blk)))
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in TILE_SCHEMA.fields])
-
-        return one.mapInPandas(gen_whole, TILE_SCHEMA), meta
+        return tiles_from_tasks(spark.createDataFrame(
+            [(cs_off, cs_len)], "off long, size long"), decode_whole), meta
     rows = [(tidx, [list(t) for t in spans])
             for tidx, spans in sorted(by_tile.items())]
     pdf = spark.createDataFrame(
         rows, "tidx int, spans array<array<bigint>>") \
         .repartition(min(len(rows), 32))
-    cols = [f.name for f in TILE_SCHEMA.fields]
     mct = cod["mct"]
     ncomp = siz["csiz"]
 
-    def gen(batches):
-        for chunk in batches:
-            out = []
-            for tidx, spans in zip(chunk["tidx"], chunk["spans"]):
-                tdata = b""
-                for off, ln in spans:
-                    raw = vsi.pread(path, int(off), int(ln))
-                    # strip SOT..SOD tile header
-                    j = 0
-                    while raw[j:j + 2] != b"\xff\x93":
-                        lh = struct.unpack_from(">H", raw, j + 2)[0]
-                        j += 2 + lh
-                    tdata += raw[j + 2:]
-                tx, ty = int(tidx) % ntx, int(tidx) // ntx
-                tx0 = max(siz["xtosiz"] + tx * siz["xtsiz"], siz["xosiz"])
-                ty0 = max(siz["ytosiz"] + ty * siz["ytsiz"], siz["yosiz"])
-                tx1 = min(siz["xtosiz"] + (tx + 1) * siz["xtsiz"],
-                          siz["xsiz"])
-                ty1 = min(siz["ytosiz"] + (ty + 1) * siz["ytsiz"],
-                          siz["ysiz"])
-                comps = j2k._decode_tile(tdata, siz, cod, qcd,
-                                         tx0, ty0, tx1, ty1)
-                if cod["transform"] == 0:
-                    # irreversible: stay float through the ICT, round
-                    # once (mirrors decode_j2k's lossy tail)
-                    comps = [c.astype(np.float64) for c in comps]
-                    if mct == 1 and ncomp >= 3:
-                        y, cb, cr = comps[0], comps[1], comps[2]
-                        comps[0] = y + 1.402 * cr
-                        comps[1] = y - 0.344136 * cb - 0.714136 * cr
-                        comps[2] = y + 1.772 * cb
-                    comps = [np.rint(c).astype(np.int64) for c in comps]
-                else:
-                    comps = [c.astype(np.int64) for c in comps]
-                    if mct == 1 and ncomp >= 3:
-                        y0, y1c, y2 = comps[0], comps[1], comps[2]
-                        g = y0 - ((y1c + y2) >> 2)
-                        comps[0], comps[1], comps[2] = y2 + g, g, y1c + g
-                for c in range(ncomp):
-                    depth = siz["comps"][c]["depth"]
-                    if not siz["comps"][c]["signed"]:
-                        comps[c] += 1 << (depth - 1)
-                        np.clip(comps[c], 0, (1 << depth) - 1,
-                                out=comps[c])
-                # emit engine tiles relative to the image origin
-                ox = tx0 - siz["xosiz"]
-                oy = ty0 - siz["yosiz"]
-                dt = ("i4" if siz["comps"][0]["signed"]
-                      else ("u2" if meta["depth"] > 8 else "u1"))
-                for c in range(ncomp):
-                    arr = comps[c]
-                    h, w = arr.shape
-                    for by in range(-(-h // tile)):
-                        for bx in range(-(-w // tile)):
-                            block = np.zeros((tile, tile), arr.dtype)
-                            sub = arr[by * tile:(by + 1) * tile,
-                                      bx * tile:(bx + 1) * tile]
-                            block[:sub.shape[0], :sub.shape[1]] = sub
-                            out.append((c + 1, 0,
-                                        (ox // tile) + bx,
-                                        (oy // tile) + by, dt, None,
-                                        encode_px(block.astype(
-                                            np.dtype(dt)))))
-            yield pd.DataFrame(out, columns=cols)
+    def decode(s):
+        tdata = b""
+        for off, ln in s.spans:
+            raw = vsi.pread(path, int(off), int(ln))
+            # strip SOT..SOD tile header
+            j = 0
+            while raw[j:j + 2] != b"\xff\x93":
+                lh = struct.unpack_from(">H", raw, j + 2)[0]
+                j += 2 + lh
+            tdata += raw[j + 2:]
+        tx, ty = s.tidx % ntx, s.tidx // ntx
+        tx0 = max(siz["xtosiz"] + tx * siz["xtsiz"], siz["xosiz"])
+        ty0 = max(siz["ytosiz"] + ty * siz["ytsiz"], siz["yosiz"])
+        tx1 = min(siz["xtosiz"] + (tx + 1) * siz["xtsiz"], siz["xsiz"])
+        ty1 = min(siz["ytosiz"] + (ty + 1) * siz["ytsiz"], siz["ysiz"])
+        comps = j2k._decode_tile(tdata, siz, cod, qcd, tx0, ty0, tx1, ty1)
+        if cod["transform"] == 0:
+            # irreversible: stay float through the ICT, round
+            # once (mirrors decode_j2k's lossy tail)
+            comps = [c.astype(np.float64) for c in comps]
+            if mct == 1 and ncomp >= 3:
+                y, cb, cr = comps[0], comps[1], comps[2]
+                comps[0] = y + 1.402 * cr
+                comps[1] = y - 0.344136 * cb - 0.714136 * cr
+                comps[2] = y + 1.772 * cb
+            comps = [np.rint(c).astype(np.int64) for c in comps]
+        else:
+            comps = [c.astype(np.int64) for c in comps]
+            if mct == 1 and ncomp >= 3:
+                y0, y1c, y2 = comps[0], comps[1], comps[2]
+                g = y0 - ((y1c + y2) >> 2)
+                comps[0], comps[1], comps[2] = y2 + g, g, y1c + g
+        for c in range(ncomp):
+            depth = siz["comps"][c]["depth"]
+            if not siz["comps"][c]["signed"]:
+                comps[c] += 1 << (depth - 1)
+                np.clip(comps[c], 0, (1 << depth) - 1, out=comps[c])
+        # engine tiles relative to the image origin
+        ox = tx0 - siz["xosiz"]
+        oy = ty0 - siz["yosiz"]
+        for c in range(ncomp):
+            yield from plane_tiles(comps[c], c + 1, ox // tile, oy // tile,
+                                   tile, dt)
 
-    return pdf.mapInPandas(gen, TILE_SCHEMA), meta
+    return tiles_from_tasks(pdf, decode), meta
 
 
 def write_jp2(arr: np.ndarray, path: str, depth: int = 8,
@@ -278,8 +238,7 @@ def write_jp2(arr: np.ndarray, path: str, depth: int = 8,
             tempfile.gettempdir(),
             f"gdal_spark_geojp2w_{os.getpid()}_{abs(hash(path))}.tif")
         write_gtiff(np.zeros((1, 1), np.uint8), tmp, geotransform=gt)
-        with open(tmp, "rb") as f:
-            geo = f.read()
+        geo = vsi.read_all(tmp)
         os.unlink(tmp)
         out += box(b"uuid", _GEOTIFF_UUID + geo)
     out += box(b"jp2c", cs)

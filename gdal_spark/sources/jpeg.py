@@ -806,26 +806,13 @@ def read_jpeg(spark, path: str, tile: int = 256):
     here — a single image is bounded by the format itself; pyramids of
     many jpg tiles decode in executors via read_mbtiles/read_pmtiles)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from ..raster.tiles import TILE_SCHEMA, encode_px
+    from ..raster.tiles import TILE_COLS, TILE_SCHEMA, plane_tiles
 
-    meta = {}
-    with vsi.open_seekable(path) as f:
-        data = f.read()
-    arr, meta = decode_jpeg(data)
-    h, w = arr.shape[:2]
+    arr, meta = decode_jpeg(vsi.read_all(path))
     planes = [arr] if arr.ndim == 2 else \
         [arr[:, :, b] for b in range(arr.shape[2])]
-    rows = []
-    for b, plane in enumerate(planes, start=1):
-        for ty in range(-(-h // tile)):
-            for tx in range(-(-w // tile)):
-                blk = np.zeros((tile, tile), plane.dtype)
-                sub = plane[ty * tile:(ty + 1) * tile,
-                            tx * tile:(tx + 1) * tile]
-                blk[:sub.shape[0], :sub.shape[1]] = sub
-                rows.append((b, 0, tx, ty, str(plane.dtype), None,
-                             encode_px(blk)))
-    pdf = pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
-    return spark.createDataFrame(pdf, schema=TILE_SCHEMA), meta
+    rows = [t for b, plane in enumerate(planes, start=1)
+            for t in plane_tiles(plane, b, 0, 0, tile, str(plane.dtype))]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=TILE_COLS),
+                                 schema=TILE_SCHEMA), meta

@@ -6,9 +6,9 @@ order is sniffed from the band-count field exactly like the reference
 (header byte 8 == 0 means big-endian). Pixel types: 0 = 8-bit, 1 = 4-bit
 (two pixels per byte, high nibble first), 2 = 16-bit.
 
-Distribution: line-strip tasks — each Spark task preads the line range
-of its tile row for each band (offsets are closed-form in the BIL
-layout), the same pattern as the other raw-raster drivers; the writer
+Distribution: line-strip tasks — each Spark task preads the lines of its
+tile row, all bands, as one byte range (offsets are closed-form in the
+BIL layout), the same pattern as the other raw-raster drivers; the writer
 pwrites per tile-row strip into a preallocated file.
 """
 
@@ -22,15 +22,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 HEADER_SIZE = 128
 
 
 def parse_header(path: str) -> dict:
-    with open(path, "rb") as f:
-        h = f.read(HEADER_SIZE)
-        size = os.fstat(f.fileno()).st_size
+    h = vsi.pread(path, 0, HEADER_SIZE)
+    size = vsi.fsize(path)
     magic = h[:6]
     if magic not in (b"HEAD74", b"HEADER"):
         raise ValueError("not an Erdas LAN/GIS file")
@@ -64,50 +64,31 @@ def read_lan(spark: SparkSession, path: str, tile: int = 256):
     meta = parse_header(path)
     w, hgt, nb = meta["width"], meta["height"], meta["nbands"]
     lb = meta["line_bytes"]
-    strips = [(b + 1, ty, ty * tile, min(hgt, (ty + 1) * tile))
-              for b in range(nb) for ty in range(-(-hgt // tile))]
-    sdf = spark.createDataFrame(
-        strips, "band long, ty long, r0 long, r1 long")
+    # lines are band-interleaved (BIL): one strip task reads its lines
+    # of every band as one contiguous range
+    strips = [(ty, ty * tile, min(hgt, (ty + 1) * tile))
+              for ty in range(-(-hgt // tile))]
+    sdf = spark.createDataFrame(strips, "ty long, r0 long, r1 long")
     bo, pix = meta["bo"], meta["pix"]
 
-    def gen(batches):
-        cols = [f.name for f in TILE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                for s in pdf.itertuples(index=False):
-                    rows_here = int(s.r1 - s.r0)
-                    arr = np.zeros((rows_here, w), np.float64)
-                    for r in range(rows_here):
-                        line = int(s.r0) + r
-                        off = HEADER_SIZE + (line * nb
-                                             + int(s.band) - 1) * lb
-                        f.seek(off)
-                        raw = f.read(lb)
-                        if len(raw) < lb:
-                            raw = raw + b"\x00" * (lb - len(raw))
-                        if pix == 1:        # 4-bit, high nibble first
-                            b8 = np.frombuffer(raw, np.uint8)
-                            v = np.empty(len(b8) * 2, np.uint8)
-                            v[0::2] = b8 >> 4
-                            v[1::2] = b8 & 0x0F
-                            arr[r] = v[:w]
-                        elif pix == 2:
-                            arr[r] = np.frombuffer(raw, bo + "i2",
-                                                   count=w)
-                        else:
-                            arr[r] = np.frombuffer(raw, np.uint8,
-                                                   count=w)
-                    for tx in range(-(-w // tile)):
-                        blk = np.zeros((tile, tile), np.float64)
-                        sub = arr[:, tx * tile:(tx + 1) * tile]
-                        blk[:sub.shape[0], :sub.shape[1]] = sub
-                        out.append((int(s.band), 0, tx, int(s.ty),
-                                    "float64", None, encode_px(blk)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        n = s.r1 - s.r0
+        size = n * nb * lb
+        raw = vsi.pread(path, HEADER_SIZE + s.r0 * nb * lb, size)
+        raw = raw.ljust(size, b"\x00")
+        if pix == 1:        # 4-bit, high nibble first
+            b8 = np.frombuffer(raw, np.uint8).reshape(n, nb, lb)
+            v = np.empty((n, nb, 2 * lb), np.uint8)
+            v[..., 0::2] = b8 >> 4
+            v[..., 1::2] = b8 & 0x0F
+        else:
+            v = np.frombuffer(raw, bo + "i2" if pix == 2 else np.uint8)
+            v = v.reshape(n, nb, -1)
+        for b in range(nb):
+            yield from plane_tiles(v[:, b, :w], b + 1, 0, s.ty, tile,
+                                   "float64")
 
-    return sdf.mapInPandas(gen, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 def write_lan(tiles: DataFrame, path: str, width_px: int, height_px: int,

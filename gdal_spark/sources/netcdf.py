@@ -25,7 +25,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 _NC_DIMENSION = 0x0A
 _NC_VARIABLE = 0x0B
@@ -82,8 +83,7 @@ class _R:
 def parse_netcdf_header(path: str) -> dict:
     """-> {version, numrecs, dims: [(name, len)], gatts: {…},
     vars: {name: {dims, shape, atts, nc_type, dtype, vsize, begin}}}."""
-    with open(path, "rb") as f:
-        buf = f.read(1 << 20)           # classic headers are KB-scale
+    buf = vsi.pread(path, 0, 1 << 20)   # classic headers are KB-scale
     if buf[:3] != b"CDF" or buf[3] not in (1, 2):
         raise ValueError("not a classic NetCDF (CDF-1/CDF-2) file")
     version = buf[3]
@@ -138,37 +138,20 @@ def read_netcdf(spark: SparkSession, path: str, var: str | None = None,
     dt = np.dtype(v["dtype"])
     rowbytes = w * dt.itemsize
     n_ty = -(-h // tile)
-    n_tx = -(-w // tile)
     work = [(ty, off + ty * tile * rowbytes) for ty in range(n_ty)]
     wdf = spark.createDataFrame(
         pd.DataFrame(work, columns=["ty", "off"]))
     native = dt.newbyteorder("=").name
 
-    def read_task(batches):
-        for pdf in batches:
-            out = []
-            for ty, o in pdf.itertuples(index=False):
-                rows = min(tile, h - int(ty) * tile)
-                with open(path, "rb") as f:
-                    f.seek(int(o))
-                    raw = f.read(rows * rowbytes)
-                slab = np.frombuffer(raw, dt).reshape(rows, w) \
-                    .astype(dt.newbyteorder("="))
-                for tx in range(n_tx):
-                    blk = np.zeros((tile, tile), slab.dtype)
-                    sub = slab[:, tx * tile:(tx + 1) * tile]
-                    blk[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((1, 0, tx, int(ty), native, None,
-                                encode_px(np.ascontiguousarray(blk))))
-            cols = [f.name for f in TILE_SCHEMA.fields]
-            yield pd.DataFrame(out, columns=cols) if out \
-                else pd.DataFrame(columns=cols)
+    def decode(s):
+        rows = min(tile, h - s.ty * tile)
+        slab = np.frombuffer(vsi.pread(path, s.off, rows * rowbytes), dt)
+        return plane_tiles(slab.reshape(rows, w), 1, 0, s.ty, tile, native)
 
     n_parts = max(1, min(len(work), 64))
     meta = {"var": var, "shape": (h, w), "atts": v["atts"],
             "gatts": hdr["gatts"], "dims": v["dims"]}
-    return wdf.repartition(n_parts).mapInPandas(read_task, TILE_SCHEMA), \
-        meta
+    return tiles_from_tasks(wdf.repartition(n_parts), decode), meta
 
 
 def _pad4(b: bytes) -> bytes:

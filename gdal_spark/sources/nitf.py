@@ -19,9 +19,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from ..raster.tiles import TILE_SCHEMA, encode_px
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
+from ..core import vsi
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 
 class _R:
@@ -133,49 +132,32 @@ def parse_image_subheader(data: bytes, pos: int) -> dict:
             "igeolo": igeolo, "subheader_end": r.p, "mask": ic == "NM"}
 
 
-def _read_nitf_jp2(spark, path, hdr, sub, data0):
-    """IC=C8/M8 image segment -> tile table via the J2K decoder."""
-    li = hdr["segments"][0][1]
+def _read_nitf_jp2(spark, path, sub, data0, size):
+    """IC=C8/M8 image segment -> tile table via the J2K decoder; the one
+    task reads the segment's image data range (data0, size)."""
     nb = sub["nbands"]
     tile = 256
     dst = np.dtype(sub["dtype"]).str.lstrip("<>=|")
-    sdf = spark.createDataFrame([(0,)], "i long")
+    sdf = spark.createDataFrame([(data0, size)], "off long, size long")
 
-    def parse(batches):
-        from ..core import vsi
+    def decode(s):
         from ..raster.j2k import decode_j2k, extract_codestream
-        for pdf in batches:
-            out = []
-            for _ in pdf.itertuples(index=False):
-                raw = vsi.pread(path, data0, li)
-                arr = decode_j2k(extract_codestream(raw))
-                for b in range(arr.shape[0]):
-                    plane = arr[b].astype(dst)
-                    h, w = plane.shape
-                    for ty in range(-(-h // tile)):
-                        for tx in range(-(-w // tile)):
-                            blk = np.zeros((tile, tile), plane.dtype)
-                            s = plane[ty * tile:(ty + 1) * tile,
-                                      tx * tile:(tx + 1) * tile]
-                            blk[:s.shape[0], :s.shape[1]] = s
-                            out.append((b + 1, 0, tx, ty,
-                                        blk.dtype.str[1:], None,
-                                        encode_px(blk)))
-            yield pd.DataFrame(out, columns=_COLS)
+        arr = decode_j2k(extract_codestream(vsi.pread(path, s.off, s.size)))
+        for b in range(arr.shape[0]):
+            yield from plane_tiles(arr[b], b + 1, 0, 0, tile, dst)
 
     meta = {"width": sub["ncols"], "height": sub["nrows"],
             "bands": nb, "tile": tile, "imode": sub["imode"],
             "dtype": sub["dtype"], "igeolo": sub["igeolo"],
-            "ic": sub["ic"]}
-    return sdf.mapInPandas(parse, TILE_SCHEMA), meta
+            "ic": sub["ic"], "data_range": (data0, size)}
+    return tiles_from_tasks(sdf, decode), meta
 
 
 def read_nitf(spark: SparkSession, path: str):
     """.ntf (first image segment, IC=NC) -> (tile table, meta); one
     task per stored block, engine tile size = NPPBH (blocks must be
     square, the common case)."""
-    with open(path, "rb") as f:
-        head = f.read(1 << 20)
+    head = vsi.pread(path, 0, 1 << 20)
     hdr = parse_nitf_header(head)
     seg_off = hdr["hl"]
     sub = parse_image_subheader(head, seg_off)
@@ -183,77 +165,57 @@ def read_nitf(spark: SparkSession, path: str):
     # exactly like the reference (nitflib segment table) — writers pad
     # subheaders, so the parsed field walk is metadata-only
     data0 = seg_off + hdr["segments"][0][0]
+    size = hdr["segments"][0][1]
     if sub["mask"] or sub["ic"] == "M8":
-        # NM/M8: a block-mask table precedes the data (IMDATOFF u32)
+        # NM/M8: a block-mask table precedes the data (IMDATOFF u32);
+        # the segment still ends LI bytes after its start
         imdatoff = int.from_bytes(head[data0:data0 + 4], "big")
         data0 += imdatoff
+        size -= imdatoff
     if sub["ic"] in ("C8", "M8"):
         # JP2-in-NITF (the reference's JPEG2000 codestream segment,
         # nitfdataset.cpp IC=C8): the whole segment is one JP2/J2K
         # codestream — decode through the from-scratch T.800 decoder
         # (5/3 AND 9/7) in one executor task; multi-tile codestreams
         # could fan out by SOT chain like sources/jp2.py.
-        return _read_nitf_jp2(spark, path, hdr, sub, data0)
+        return _read_nitf_jp2(spark, path, sub, data0, size)
     if sub["nppbh"] != sub["nppbv"]:
         raise ValueError("non-square NITF blocks unsupported")
     tile = sub["nppbh"]
     item = max(1, sub["nbpp"] // 8)
     dt = np.dtype(">" + sub["dtype"])
+    out_dt = dt.newbyteorder("=").str[1:]
     nb, nbpr, nbpc = sub["nbands"], sub["nbpr"], sub["nbpc"]
-    blockpx = tile * tile
+    blockbytes = tile * tile * item
     imode = sub["imode"]
+    if imode not in ("S", "B", "P", "R"):
+        raise ValueError(f"IMODE {imode!r} unsupported")
 
-    jobs = []
-    for by in range(nbpc):
-        for bx in range(nbpr):
-            bi = by * nbpr + bx
-            jobs.append((bx, by, bi))
+    jobs = [(bx, by, by * nbpr + bx)
+            for by in range(nbpc) for bx in range(nbpr)]
     sdf = spark.createDataFrame(jobs, "bx long, by long, bi long")
 
-    def parse(batches):
-        for pdf in batches:
-            out = []
-            for s in pdf.itertuples(index=False):
-                with open(path, "rb") as f:
-                    if imode == "S":          # all blocks of band b
-                        planes = []
-                        for b in range(nb):
-                            f.seek(data0 + (b * nbpr * nbpc + s.bi)
-                                   * blockpx * item)
-                            raw = f.read(blockpx * item)
-                            planes.append(np.frombuffer(
-                                raw, dt).reshape(tile, tile))
-                    elif imode == "B":        # bands within the block
-                        f.seek(data0 + s.bi * blockpx * item * nb)
-                        raw = f.read(blockpx * item * nb)
-                        a = np.frombuffer(raw, dt).reshape(
-                            nb, tile, tile)
-                        planes = [a[b] for b in range(nb)]
-                    elif imode == "P":        # pixel-interleaved block
-                        f.seek(data0 + s.bi * blockpx * item * nb)
-                        raw = f.read(blockpx * item * nb)
-                        a = np.frombuffer(raw, dt).reshape(
-                            tile, tile, nb)
-                        planes = [a[:, :, b] for b in range(nb)]
-                    elif imode == "R":        # row-interleaved block
-                        f.seek(data0 + s.bi * blockpx * item * nb)
-                        raw = f.read(blockpx * item * nb)
-                        a = np.frombuffer(raw, dt).reshape(
-                            tile, nb, tile)
-                        planes = [a[:, b, :] for b in range(nb)]
-                    else:
-                        raise ValueError(f"IMODE {imode!r} unsupported")
-                for b, plane in enumerate(planes, 1):
-                    block = np.ascontiguousarray(plane).astype(
-                        dt.newbyteorder("=").str.lstrip("<>=|"))
-                    out.append((b, 0, s.bx, s.by, block.dtype.str[1:],
-                                None, encode_px(block)))
-            yield pd.DataFrame(out, columns=_COLS)
+    def decode(s):
+        if imode == "S":          # all blocks of band b
+            planes = [np.frombuffer(vsi.pread(
+                path, data0 + (b * nbpr * nbpc + s.bi) * blockbytes,
+                blockbytes), dt).reshape(tile, tile) for b in range(nb)]
+        else:
+            a = np.frombuffer(vsi.pread(path, data0 + s.bi * blockbytes * nb,
+                                        blockbytes * nb), dt)
+            if imode == "B":        # bands within the block
+                planes = a.reshape(nb, tile, tile)
+            elif imode == "P":      # pixel-interleaved block
+                planes = a.reshape(tile, tile, nb).transpose(2, 0, 1)
+            else:                   # row-interleaved block
+                planes = a.reshape(tile, nb, tile).transpose(1, 0, 2)
+        for b, plane in enumerate(planes, 1):
+            yield from plane_tiles(plane, b, s.bx, s.by, tile, out_dt)
 
     meta = {"width": sub["ncols"], "height": sub["nrows"],
             "bands": nb, "tile": tile, "imode": imode,
             "dtype": sub["dtype"], "igeolo": sub["igeolo"]}
-    return sdf.mapInPandas(parse, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 def write_nitf(tiles, path: str, *, width: int, height: int,

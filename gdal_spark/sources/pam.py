@@ -8,7 +8,7 @@ the sidecar for a raster path; `apply_pam` overlays it on a reader's
 meta dict with the reference's precedence (PAM overrides the driver's
 intrinsic values — TryLoadXML runs after the format's own georef is
 read, and its SetGeoTransform/SetSpatialRef replace them);
-`write_pam` renders the same XML so stats/nodata computed by the
+`write_pam` merges into the same XML so stats/nodata computed by the
 engine persist for the reference's tools to read back.
 
 Driver-side only and bounded by construction: a sidecar is KBs of XML.
@@ -16,10 +16,25 @@ Driver-side only and bounded by construction: a sidecar is KBs of XML.
 
 from __future__ import annotations
 
+import re
 import xml.etree.ElementTree as ET
-from xml.sax.saxutils import escape
 
 from ..core import vsi
+
+
+def _load(aux: str):
+    """Parsed <PAMDataset> root of a sidecar, or None if absent."""
+    try:
+        data = vsi.read_all(aux)
+    except (FileNotFoundError, OSError):
+        return None
+    text = data.decode("utf-8", "replace")
+    # the reference's CPLXML tolerates embedded <?xml?> declarations
+    # inside xml:* metadata payloads; strip any not at the very start
+    head, _, rest = text.partition(">")
+    rest = re.sub(r"<\?xml[^>]*\?>", "", rest)
+    root = ET.fromstring(head + ">" + rest)
+    return root if root.tag == "PAMDataset" else None
 
 
 def read_pam(path: str) -> dict | None:
@@ -29,19 +44,8 @@ def read_pam(path: str) -> dict | None:
     gcps [{id, pixel, line, x, y, z}], gcp_projection,
     bands {band_no: {nodata, description, metadata, category_names,
     color_interp}}."""
-    aux = path + ".aux.xml"
-    try:
-        data = vsi.pread(aux, 0, vsi.fsize(aux))
-    except (FileNotFoundError, OSError):
-        return None
-    text = data.decode("utf-8", "replace")
-    # the reference's CPLXML tolerates embedded <?xml?> declarations
-    # inside xml:* metadata payloads; strip any not at the very start
-    head, _, rest = text.partition(">")
-    import re
-    rest = re.sub(r"<\?xml[^>]*\?>", "", rest)
-    root = ET.fromstring(head + ">" + rest)
-    if root.tag != "PAMDataset":
+    root = _load(path + ".aux.xml")
+    if root is None:
         return None
     out = {"srs": None, "geotransform": None, "metadata": {},
            "gcps": [], "gcp_projection": None, "bands": {}}
@@ -128,46 +132,53 @@ def apply_pam(meta: dict, pam: dict | None) -> dict:
     return meta
 
 
+def _child(parent, tag: str, **attrib):
+    """The `tag` child carrying these attributes ("" = absent), created
+    ahead of the band elements when missing."""
+    for c in parent.findall(tag):
+        if all(c.get(k, "") == v for k, v in attrib.items()):
+            return c
+    el = ET.Element(tag, {k: v for k, v in attrib.items() if v})
+    at = next((i for i, c in enumerate(parent)
+               if c.tag == "PAMRasterBand"), len(parent))
+    parent.insert(len(parent) if tag == "PAMRasterBand" else at, el)
+    return el
+
+
 def write_pam(path: str, *, geotransform=None, srs: str | None = None,
               metadata: dict | None = None,
               band_stats: dict | None = None,
               band_nodata: dict | None = None) -> str:
-    """Render `<path>.aux.xml` (the reference's PAM serializer shape:
+    """Merge into `<path>.aux.xml` (the reference's PAM serializer shape:
     statistics land as STATISTICS_* MDI keys on the band, exactly what
-    GDALRasterBand::SetStatistics persists)."""
-    lines = ["<PAMDataset>"]
+    GDALRasterBand::SetStatistics persists). Whatever the sidecar already
+    holds and this call does not set is kept, so `gdal raster edit` and
+    `gdalinfo -stats` do not erase each other."""
+    aux = path + ".aux.xml"
+    root = _load(aux)
+    if root is None:
+        root = ET.Element("PAMDataset")
     if srs:
-        lines.append(f"  <SRS>{escape(srs)}</SRS>")
+        _child(root, "SRS").text = srs
     if geotransform is not None:
-        gtv = ", ".join(f"{v:.16e}" for v in geotransform)
-        lines.append(f"  <GeoTransform>{gtv}</GeoTransform>")
+        _child(root, "GeoTransform").text = ", ".join(
+            f"{v:.16e}" for v in geotransform)
     for dom, kv in (metadata or {}).items():
-        attr = f' domain="{escape(dom)}"' if dom else ""
-        lines.append(f"  <Metadata{attr}>")
+        md = _child(root, "Metadata", domain=dom)
         for k, v in kv.items():
-            lines.append(f'    <MDI key="{escape(k)}">{escape(str(v))}'
-                         "</MDI>")
-        lines.append("  </Metadata>")
-    bands = sorted(set(list((band_stats or {}).keys())
-                       + list((band_nodata or {}).keys())))
-    for b in bands:
-        lines.append(f'  <PAMRasterBand band="{b}">')
-        if band_nodata and b in band_nodata:
-            lines.append(f"    <NoDataValue>{band_nodata[b]:.14e}"
-                         "</NoDataValue>")
-        st = (band_stats or {}).get(b)
-        if st:
-            lines.append("    <Metadata>")
-            for key in ("minimum", "maximum", "mean", "stddev",
-                        "valid_percent"):
-                if key in st:
-                    lines.append(
-                        f'      <MDI key="STATISTICS_{key.upper()}">'
-                        f"{st[key]}</MDI>")
-            lines.append("    </Metadata>")
-        lines.append("  </PAMRasterBand>")
-    lines.append("</PAMDataset>")
-    xml = "\n".join(lines) + "\n"
-    with open(path + ".aux.xml", "w") as f:
-        f.write(xml)
-    return path + ".aux.xml"
+            _child(md, "MDI", key=k).text = str(v)
+    for b, nod in (band_nodata or {}).items():
+        _child(_child(root, "PAMRasterBand", band=str(b)),
+               "NoDataValue").text = f"{nod:.14e}"
+    for b, st in (band_stats or {}).items():
+        md = _child(_child(root, "PAMRasterBand", band=str(b)),
+                    "Metadata", domain="")
+        for key in ("minimum", "maximum", "mean", "stddev",
+                    "valid_percent"):
+            if key in st:
+                _child(md, "MDI",
+                       key=f"STATISTICS_{key.upper()}").text = str(st[key])
+    ET.indent(root)
+    with open(aux, "w") as f:
+        f.write(ET.tostring(root, encoding="unicode") + "\n")
+    return aux

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 SIG = b"RUU CROSS SYSTEM MAP FORMAT"
 ADDR_DATA = 256
@@ -92,28 +92,14 @@ def read_pcraster(spark: SparkSession, path: str, tile: int = 256):
               for ty in range(-(-hgt // tile))]
     sdf = spark.createDataFrame(strips, "ty long, r0 long, r1 long")
 
-    def gen(batches):
-        cols = [f.name for f in TILE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for s in pdf.itertuples(index=False):
-                rows_here = int(s.r1 - s.r0)
-                raw = vsi.pread(path, ADDR_DATA + int(s.r0) * w * item,
-                                rows_here * w * item)
-                if len(raw) < rows_here * w * item:
-                    raw += b"\x00" * (rows_here * w * item - len(raw))
-                arr = np.frombuffer(raw, bo + dt).reshape(rows_here, w) \
-                    .astype(np.float64)
-                for tx in range(-(-w // tile)):
-                    blk = np.zeros((tile, tile), np.float64)
-                    sub = arr[:, tx * tile:(tx + 1) * tile]
-                    blk[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((1, 0, tx, int(s.ty), "float64",
-                                nodata, encode_px(blk)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        size = (s.r1 - s.r0) * w * item
+        raw = vsi.pread(path, ADDR_DATA + s.r0 * w * item, size)
+        arr = np.frombuffer(raw.ljust(size, b"\x00"), bo + dt) \
+            .reshape(-1, w)
+        return plane_tiles(arr, 1, 0, s.ty, tile, "float64", nodata)
 
-    return sdf.mapInPandas(gen, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 def write_pcraster(tiles: DataFrame, path: str, width_px: int,

@@ -27,6 +27,7 @@ import re
 
 from pyspark.sql import SparkSession
 
+from ..core import vsi
 from .rawraster import _plan_and_read
 
 _STYPES = {
@@ -133,9 +134,8 @@ def _resolve_pointer(ptr, label_path: str, record_bytes: int):
 
 def read_pds(spark: SparkSession, path: str, tile: int = 256):
     """.LBL / attached-label .IMG -> (tile table, meta)."""
-    with open(path, "rb") as f:
-        head = f.read(1 << 20)
-    label = parse_odl(head.decode("ascii", errors="replace"))
+    label = parse_odl(vsi.pread(path, 0, 1 << 20)
+                      .decode("ascii", errors="replace"))
     if str(label.get("PDS_VERSION_ID", "")).upper() not in ("PDS3", "PDS"):
         raise ValueError("not a PDS3 label")
     img = label.get("IMAGE")
@@ -244,9 +244,8 @@ def read_isis2(spark: SparkSession, path: str, tile: int = 256):
     CORE_ITEM_TYPE SUN_*/PC_* x CORE_ITEM_BYTES -> dtype. Pinned to the
     autotest arvidson_original_truncated.cub checksum 382 (truncated
     payload zero-fills, like the reference's partial read)."""
-    with open(path, "rb") as f:
-        head = f.read(1 << 20)
-    label = parse_odl(head.decode("ascii", errors="replace"))
+    label = parse_odl(vsi.pread(path, 0, 1 << 20)
+                      .decode("ascii", errors="replace"))
     qube = label.get("QUBE")
     if qube is None:
         raise ValueError("not an ISIS2 cube (no QUBE object)")

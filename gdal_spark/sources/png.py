@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 _MOD = 65521
@@ -200,32 +200,16 @@ def read_png(spark: SparkSession, path: str, tile: int = 256) -> DataFrame:
     the Up/Paeth filters are sequentially dependent), bands 1..samples."""
     bf = spark.read.format("binaryFile").load(path) \
         .select("path", "content")
-    cols = [f.name for f in TILE_SCHEMA.fields]
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for blob in pdf["content"]:
-                arr, meta = decode_png(bytes(blob))
-                if arr.ndim == 2:
-                    arr = arr[:, :, None]
-                h, w, ns = arr.shape
-                dt = "u2" if meta["depth"] == 16 else "u1"
-                rows = []
-                for b in range(ns):
-                    for ty in range(-(-h // tile)):
-                        for tx in range(-(-w // tile)):
-                            block = np.zeros((tile, tile), arr.dtype)
-                            sub = arr[ty * tile:(ty + 1) * tile,
-                                      tx * tile:(tx + 1) * tile, b]
-                            block[:sub.shape[0], :sub.shape[1]] = sub
-                            rows.append((b + 1, 0, tx, ty, dt, None,
-                                         encode_px(block)))
-                frames.append(pd.DataFrame(rows, columns=cols))
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                columns=cols)
+    def decode(f):
+        arr, meta = decode_png(bytes(f.content))
+        if arr.ndim == 2:
+            arr = arr[:, :, None]
+        dt = "u2" if meta["depth"] == 16 else "u1"
+        for b in range(arr.shape[2]):
+            yield from plane_tiles(arr[:, :, b], b + 1, 0, 0, tile, dt)
 
-    return bf.mapInPandas(parse, TILE_SCHEMA)
+    return tiles_from_tasks(bf, decode)
 
 
 def write_png(tiles: DataFrame, path: str, width_px: int, height_px: int,

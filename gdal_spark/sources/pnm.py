@@ -21,15 +21,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 
 def parse_pnm_header(path: str):
     """-> (magic, width, height, maxval, data_offset)."""
-    with open(path, "rb") as f:
-        head = f.read(65536)
+    head = vsi.pread(path, 0, 65536)
     toks, pos, ntok = [], 0, 0
     while ntok < 4 and pos < len(head):
         # skip whitespace and '#' comments
@@ -58,7 +56,6 @@ def read_pnm(spark: SparkSession, path: str, tile: int = 256):
     item = 1 if maxval < 256 else 2
     nchan = 3 if magic == "P6" else 1
     stride = w * nchan * item
-    ntx = -(-w // tile)
 
     if magic == "P2":
         strips = [(-1, 0, h)]
@@ -67,41 +64,23 @@ def read_pnm(spark: SparkSession, path: str, tile: int = 256):
                   for ty in range(-(-h // tile))]
     sdf = spark.createDataFrame(strips, "ty long, r0 long, r1 long")
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                rows_here = s.r1 - s.r0
-                if magic == "P2":
-                    with open(path, "rb") as f:
-                        f.seek(off)
-                        vals = np.array(f.read().split(), dtype=np.int64)
-                    arr = vals.astype(dtype).reshape(h, w)[:, :, None]
-                else:
-                    with open(path, "rb") as f:
-                        f.seek(off + s.r0 * stride)
-                        raw = f.read(rows_here * stride)
-                    a = np.frombuffer(raw, dtype=">u2" if item == 2
-                                      else "u1")
-                    arr = a.astype(dtype).reshape(rows_here, w, nchan)
-                out = []
-                for c in range(nchan):
-                    plane = arr[:, :, c]
-                    for bty in range(s.r0 // tile, -(-s.r1 // tile)):
-                        y0 = bty * tile - s.r0
-                        for tx in range(ntx):
-                            block = np.zeros((tile, tile), dtype)
-                            sub = plane[max(0, y0):y0 + tile,
-                                        tx * tile:(tx + 1) * tile]
-                            block[:sub.shape[0], :sub.shape[1]] = sub
-                            out.append((c + 1, 0, tx, bty, dtype, None,
-                                        encode_px(block)))
-                frames.append(pd.DataFrame(out, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+    def decode(s):
+        if magic == "P2":
+            vals = np.array(vsi.pread(path, off, vsi.fsize(path) - off)
+                            .split(), dtype=np.int64)
+            arr = vals.astype(dtype).reshape(h, w)[:, :, None]
+        else:
+            n = s.r1 - s.r0
+            a = np.frombuffer(vsi.pread(path, off + s.r0 * stride,
+                                        n * stride),
+                              dtype=">u2" if item == 2 else "u1")
+            arr = a.astype(dtype).reshape(n, w, nchan)
+        for c in range(nchan):
+            yield from plane_tiles(arr[:, :, c], c + 1, 0, s.r0 // tile,
+                                   tile, dtype)
 
     meta = {"magic": magic, "width": w, "height": h, "maxval": maxval}
-    return sdf.mapInPandas(parse, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 def write_pnm(tiles: DataFrame, path: str, *, width: int, height: int,

@@ -29,21 +29,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..core import vsi
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 # ENVI "data type" codes (envidataset.cpp GetEnviType)
 _ENVI_DTYPE = {1: "u1", 2: "i2", 3: "i4", 4: "f4", 5: "f8",
                12: "u2", 13: "u4", 14: "i8", 15: "u8"}
 _ENVI_CODE = {v: k for k, v in _ENVI_DTYPE.items()}
 
-_COLS = [f.name for f in TILE_SCHEMA.fields]
-
-
 def parse_envi_header(hdr_path: str) -> dict:
     """ENVI headers are ``key = value`` lines; values may be {}-wrapped
     multi-line lists (map info, band names). envidataset.cpp:ReadHeader."""
-    with open(hdr_path, "r", encoding="ascii", errors="replace") as f:
-        text = f.read()
+    text = vsi.read_all(hdr_path).decode("ascii", errors="replace")
     meta: dict = {}
     key, buf, in_braces = None, [], False
     for line in text.splitlines():
@@ -70,7 +67,6 @@ def _plan_and_read(spark: SparkSession, raw_path: str, *, samples: int,
                    tile: int) -> DataFrame:
     item = np.dtype(dtype).itemsize
     swap = byte_order != (0 if np.little_endian else 1) and item > 1
-    ntx = -(-samples // tile)
     interleave = interleave.lower()[:3]
 
     strips = []
@@ -86,61 +82,31 @@ def _plan_and_read(spark: SparkSession, raw_path: str, *, samples: int,
     sdf = spark.createDataFrame(
         strips, "band int, ty long, r0 long, r1 long, b0 long")
 
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                rows_here = s.r1 - s.r0
-                if s.band > 0:  # BSQ: one band slab
-                    n = rows_here * samples
-                    with open(raw_path, "rb") as f:
-                        f.seek(s.b0)
-                        raw = f.read(n * item)
-                    if len(raw) < n * item:
-                        # truncated input: keep the partial item's read
-                        # bytes, zero-fill only the remainder (GDAL
-                        # RawRasterBand memsets past the short read)
-                        raw = raw + b"\0" * (n * item - len(raw))
-                    arr = np.frombuffer(raw, dtype=dtype)
-                    if swap:
-                        arr = arr.byteswap()
-                    cube = arr.reshape(1, rows_here, samples)
-                    blist = [s.band]
-                else:
-                    n = rows_here * samples * bands
-                    with open(raw_path, "rb") as f:
-                        f.seek(s.b0)
-                        raw = f.read(n * item)
-                    if len(raw) < n * item:
-                        # truncated input: keep the partial item's read
-                        # bytes, zero-fill only the remainder (GDAL
-                        # RawRasterBand memsets past the short read)
-                        raw = raw + b"\0" * (n * item - len(raw))
-                    arr = np.frombuffer(raw, dtype=dtype)
-                    if swap:
-                        arr = arr.byteswap()
-                    if interleave == "bil":  # (row, band, col)
-                        cube = arr.reshape(rows_here, bands,
-                                           samples).transpose(1, 0, 2)
-                    else:                    # bip: (row, col, band)
-                        cube = arr.reshape(rows_here, samples,
-                                           bands).transpose(2, 0, 1)
-                    blist = list(range(1, bands + 1))
-                out = []
-                fill = 0 if nodata is None else nodata
-                for bi, b in enumerate(blist):
-                    plane = cube[bi]
-                    for tx in range(ntx):
-                        block = np.full((tile, tile), fill, dtype=dtype)
-                        sub = plane[:, tx * tile:(tx + 1) * tile]
-                        block[:sub.shape[0], :sub.shape[1]] = sub
-                        out.append((b, 0, tx, s.ty, dtype, nodata,
-                                    encode_px(block)))
-                frames.append(pd.DataFrame(out, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+    fill = 0 if nodata is None else nodata
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA)
+    def decode(s):
+        # BSQ tasks read one band slab, BIL/BIP tasks every band's rows
+        n = (s.r1 - s.r0) * samples * (1 if s.band > 0 else bands) * item
+        # truncated input: keep the partial item's read bytes, zero-fill
+        # only the remainder (GDAL RawRasterBand memsets past the short
+        # read)
+        arr = np.frombuffer(vsi.pread(raw_path, s.b0, n).ljust(n, b"\0"),
+                            dtype=dtype)
+        if swap:
+            arr = arr.byteswap()
+        if s.band > 0:
+            cube, blist = arr.reshape(1, -1, samples), [s.band]
+        else:
+            blist = range(1, bands + 1)
+            if interleave == "bil":  # (row, band, col)
+                cube = arr.reshape(-1, bands, samples).transpose(1, 0, 2)
+            else:                    # bip: (row, col, band)
+                cube = arr.reshape(-1, samples, bands).transpose(2, 0, 1)
+        for plane, b in zip(cube, blist):
+            yield from plane_tiles(plane, b, 0, s.ty, tile, dtype, nodata,
+                                   fill)
+
+    return tiles_from_tasks(sdf, decode)
 
 
 def read_envi(spark: SparkSession, path: str, tile: int = 256):
@@ -241,11 +207,10 @@ def read_ehdr(spark: SparkSession, path: str, tile: int = 256):
         path = next(stem + e for e in (".bil", ".bsq", ".bip", ".flt", ".img")
                     if os.path.isfile(stem + e))
     meta = {}
-    with open(hdr_path) as f:
-        for line in f:
-            tok = line.split()
-            if len(tok) >= 2:
-                meta[tok[0].upper()] = tok[1]
+    for line in vsi.read_all(hdr_path).decode().splitlines():
+        tok = line.split()
+        if len(tok) >= 2:
+            meta[tok[0].upper()] = tok[1]
     nbits = int(meta.get("NBITS", 8))
     ptype = meta.get("PIXELTYPE",
                      "FLOAT" if path.lower().endswith(".flt")

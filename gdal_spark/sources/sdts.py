@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from ..core.iso8211 import DDFModule
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 NODATA = -32766.0
 
@@ -85,27 +85,16 @@ def read_sdts(spark: SparkSession, catd_path: str, tile: int = 256):
         strips.append((ty, payload))
     sdf = spark.createDataFrame(strips,
                                 "ty long, rows array<array<int>>")
-    cols = [f.name for f in TILE_SCHEMA.fields]
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for s in pdf.itertuples(index=False):
-                rows_here = len(s.rows)
-                arr = np.full((rows_here, w), NODATA, np.float64)
-                for r, vals in enumerate(s.rows):
-                    v = np.asarray(vals[:w], np.float64)
-                    arr[r, :len(v)] = v
-                for tx in range(-(-w // tile)):
-                    blk = np.full((tile, tile), NODATA, np.float64)
-                    sub = arr[:, tx * tile:(tx + 1) * tile]
-                    blk[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((1, 0, tx, int(s.ty), "float64",
-                                NODATA, encode_px(blk)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        arr = np.full((len(s.rows), w), NODATA, np.float64)
+        for r, vals in enumerate(s.rows):
+            v = np.asarray(vals[:w], np.float64)
+            arr[r, :len(v)] = v
+        return plane_tiles(arr, 1, 0, s.ty, tile, "float64", NODATA,
+                           fill=NODATA)
 
-    return sdf.mapInPandas(gen, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 # ---------------------------------------------------------------------------

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 _MERC = 20037508.342789244
 
@@ -287,38 +287,26 @@ def read_tileservice(spark: SparkSession, cfg: dict | str,
     zeroblock = cfg.get("zeroblock", False)
     plan = tile_plan(spark, cfg, level, bbox)
 
-    def fetch(batches):
-        cols = [f.name for f in TILE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    size = vsi.fsize(r.url)
-                    arr = _decode_image(vsi.pread(r.url, 0, size))
-                except (FileNotFoundError, OSError, ValueError):
-                    if not zeroblock:
-                        continue
-                    arr = np.zeros((bs_y, bs_x, nbands), np.uint8)
-                if arr.ndim == 2:
-                    arr = arr[:, :, None]
-                for b in range(min(nbands, arr.shape[2])):
-                    plane = arr[:, :, b]
-                    if plane.shape != (bs_y, bs_x):
-                        full = np.zeros((bs_y, bs_x), plane.dtype)
-                        full[:plane.shape[0], :plane.shape[1]] = plane
-                        plane = full
-                    out.append((b + 1, int(level), int(r.tile_x),
-                                int(r.tile_y), str(plane.dtype.name),
-                                None, encode_px(plane)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(r):
+        try:
+            arr = _decode_image(vsi.read_all(r.url))
+        except (FileNotFoundError, OSError, ValueError):
+            if not zeroblock:
+                return []
+            arr = np.zeros((bs_y, bs_x, nbands), np.uint8)
+        if arr.ndim == 2:       # a gray tile fills every declared band
+            arr = np.repeat(arr[:, :, None], nbands, axis=2)
+        return [t for b in range(min(nbands, arr.shape[2]))
+                for t in plane_tiles(arr[:, :, b], b + 1, r.tile_x,
+                                     r.tile_y, bs_x, arr.dtype.name,
+                                     zoom=level)]
 
     meta = {"width": nx * bs_x, "height": ny * bs_y,
             "geotransform": (cfg["ulx"], resx, 0.0,
                              cfg["uly"], 0.0, -resy),
             "projection": cfg["projection"], "bands": nbands,
             "level": level, "tiles": (nx, ny)}
-    return plan.mapInPandas(fetch, TILE_SCHEMA), meta
+    return tiles_from_tasks(plan, decode), meta
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..raster.tiles import decode_px, plane_tiles, tiles_from_tasks
 
 NODATA = -32767
 _FIRST_BLOCK_VALS = 146          # (1024 - 144) // 6 — usgsdem_create.cpp
@@ -321,10 +321,8 @@ def read_usgsdem(spark: SparkSession, path: str,
             b0 = b1 = 0
         else:
             b0 = have[0][1]
-            last = have[-1][1]
             b1 = offs[have[-1][0] + 1] if have[-1][0] + 1 < len(offs) \
                 else meta["size"]
-            del last
         strips.append((tx, c0, c1, b0, b1,
                        [o - b0 for _, o in have],
                        [i - c0 for i, _ in have]))
@@ -334,29 +332,16 @@ def read_usgsdem(spark: SparkSession, path: str,
     dtype = "f4" if meta["is_float"] else "i2"
     npdt = np.float32 if meta["is_float"] else np.int16
 
-    def parse(batches):
-        cols = [f.name for f in TILE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for s in pdf.itertuples(index=False):
-                arr = np.full((ny, int(s.c1 - s.c0)), NODATA, npdt)
-                if len(s.rel):
-                    with vsi.open_seekable(path) as f:
-                        f.seek(int(s.b0))
-                        raw = f.read(int(s.b1 - s.b0))
-                    for rel, ci in zip(s.rel, s.ci):
-                        _parse_profile(raw[int(rel):], meta,
-                                       arr[:, int(ci)])
-                for ty in range(-(-ny // tile)):
-                    block = np.full((tile, tile), NODATA, npdt)
-                    sub = arr[ty * tile:(ty + 1) * tile, :]
-                    block[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((1, 0, int(s.tx), ty, dtype,
-                                float(NODATA), encode_px(block)))
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        arr = np.full((ny, s.c1 - s.c0), NODATA, npdt)
+        if len(s.rel):
+            raw = vsi.pread(path, s.b0, s.b1 - s.b0)
+            for rel, ci in zip(s.rel, s.ci):
+                _parse_profile(raw[int(rel):], meta, arr[:, int(ci)])
+        return plane_tiles(arr, 1, s.tx, 0, tile, dtype, NODATA,
+                           fill=NODATA)
 
-    return sdf.mapInPandas(parse, TILE_SCHEMA)
+    return tiles_from_tasks(sdf, decode)
 
 
 def _d24(v: float) -> bytes:

@@ -23,12 +23,10 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 
-from ..raster.tiles import TILE_SCHEMA, encode_px
-
-_COLS = [f.name for f in TILE_SCHEMA.fields]
+from ..core import vsi
+from ..raster.tiles import plane_tiles, tiles_from_tasks
 
 
 def _tokenize(label: str):
@@ -66,14 +64,11 @@ def _tokenize(label: str):
 
 
 def parse_vicar_label(path: str) -> dict:
-    with open(path, "rb") as f:
-        head = f.read(64)
-    m = re.match(rb"LBLSIZE=(\d+)", head)
+    m = re.match(rb"LBLSIZE=(\d+)", vsi.pread(path, 0, 64))
     if not m:
         raise ValueError("not a VICAR file (no LBLSIZE)")
     lblsize = int(m.group(1))
-    with open(path, "rb") as f:
-        label = f.read(lblsize).decode("ascii", errors="replace")
+    label = vsi.pread(path, 0, lblsize).decode("ascii", errors="replace")
     out = {}
     for k, v in _tokenize(label):
         try:
@@ -144,77 +139,48 @@ def read_vicar(spark: SparkSession, path: str, tile: int = 256):
             dt = np.dtype(("<" if realfmt == "RIEEE" else ">") + "f8")
     else:
         raise ValueError(f"unsupported VICAR FORMAT {fmt!r}")
+    if org not in ("BSQ", "BIL", "BIP"):
+        raise ValueError(f"unsupported VICAR ORG {org!r}")
     item = dt.itemsize
     out_dt = ("f4" if fmt == "REAL" else "f8") if vax \
         else dt.newbyteorder("=").str.lstrip("<>=|")
 
-    ntx = -(-ns // tile)
-    strips = []
-    for b in range(nb):
-        for ty in range(-(-nl // tile)):
-            strips.append((b + 1, ty, ty * tile, min(nl, (ty + 1) * tile)))
+    # BSQ tasks read one band's lines; BIL/BIP lines interleave every
+    # band, so their tasks read all bands of the strip as one range
+    strips = [(b + 1 if org == "BSQ" else 0, ty, ty * tile,
+               min(nl, (ty + 1) * tile))
+              for b in range(nb if org == "BSQ" else 1)
+              for ty in range(-(-nl // tile))]
     sdf = spark.createDataFrame(strips, "band int, ty long, r0 long, r1 long")
+    # records per line and payload bytes per record (after the NBB prefix)
+    nrec, payload = {"BSQ": (1, ns * item), "BIL": (nb, ns * item),
+                     "BIP": (ns, nb * item)}[org]
 
-    def rec_index(b, line):
+    def decode(s):
+        n = s.r1 - s.r0
+        first = (s.band - 1) * nl + s.r0 if org == "BSQ" else s.r0 * nrec
+        size = n * nrec * recsize
+        raw = vsi.pread(path, offset + first * recsize, size)
+        recs = np.frombuffer(raw.ljust(size, b"\0"), "u1") \
+            .reshape(n * nrec, recsize)       # truncated: zero-filled
+        arr = np.ascontiguousarray(recs[:, nbb:nbb + payload]).view(dt)
+        if vax:
+            arr = (_vax_f_decode(arr) if fmt == "REAL"
+                   else _vax_d_decode(arr))
         if org == "BSQ":
-            return b * nl + line
-        if org == "BIL":
-            return line * nb + b
-        return line * ns                    # BIP: one record per SAMPLE
-
-    def parse(batches):
-        for pdf in batches:
-            frames = []
-            for s in pdf.itertuples(index=False):
-                rows_here = s.r1 - s.r0
-                b = s.band - 1
-                raw = bytearray()
-                with open(path, "rb") as f:
-                    for r in range(s.r0, s.r1):
-                        if org == "BIP":
-                            # ns records of (nbb + nb*item) per line
-                            f.seek(offset + rec_index(b, r) * recsize)
-                            want = ns * recsize
-                            got = f.read(want)
-                            if len(got) < want:
-                                got += b"\0" * (want - len(got))
-                            if nbb:
-                                got = bytes(np.frombuffer(got, "u1")
-                                            .reshape(ns, recsize)[:, nbb:]
-                                            .tobytes())
-                            raw += got
-                        else:
-                            f.seek(offset + rec_index(b, r) * recsize
-                                   + nbb)
-                            want = ns * item
-                            got = f.read(want)
-                            if len(got) < want:     # truncated: zero-fill
-                                got += b"\0" * (want - len(got))
-                            raw += got
-                arr = np.frombuffer(bytes(raw), dtype=dt)
-                if vax:
-                    arr = (_vax_f_decode(arr) if fmt == "REAL"
-                           else _vax_d_decode(arr))
-                elif dt.byteorder == ">":
-                    arr = arr.astype(dt.newbyteorder("="))
-                if org == "BIP":
-                    arr = arr.reshape(rows_here, ns, nb)[:, :, b]
-                plane = np.ascontiguousarray(
-                    arr.reshape(rows_here, ns)).astype(out_dt)
-                out = []
-                for tx in range(ntx):
-                    block = np.zeros((tile, tile), out_dt)
-                    sub = plane[:, tx * tile:(tx + 1) * tile]
-                    block[:sub.shape[0], :sub.shape[1]] = sub
-                    out.append((s.band, 0, tx, s.ty, out_dt, None,
-                                encode_px(block)))
-                frames.append(pd.DataFrame(out, columns=_COLS))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame(columns=_COLS))
+            planes = [(s.band, arr.reshape(n, ns))]
+        elif org == "BIL":
+            planes = [(b + 1, p) for b, p in enumerate(
+                arr.reshape(n, nb, ns).transpose(1, 0, 2))]
+        else:
+            planes = [(b + 1, p) for b, p in enumerate(
+                arr.reshape(n, ns, nb).transpose(2, 0, 1))]
+        for b, plane in planes:
+            yield from plane_tiles(plane, b, 0, s.ty, tile, out_dt)
 
     meta = {"width": ns, "height": nl, "bands": nb, "dtype": out_dt,
             "org": org, "label": lbl}
-    return sdf.mapInPandas(parse, TILE_SCHEMA), meta
+    return tiles_from_tasks(sdf, decode), meta
 
 
 _WFMT = {"u1": ("BYTE", 1), "i2": ("HALF", 2), "i4": ("FULL", 4),
@@ -254,12 +220,10 @@ def write_vicar(tiles, path: str, *, samples: int, lines: int,
                bands=1, dtype=dtype, tile=tile)
     with open(path, "wb") as f:
         f.write(lbl.encode("ascii"))
-        with open(tmp_payload, "rb") as p:
-            while True:
-                chunk = p.read(1 << 20)
-                if not chunk:
-                    break
-                f.write(chunk)
+        pos = 0
+        while chunk := vsi.pread(tmp_payload, pos, 1 << 20):
+            f.write(chunk)
+            pos += len(chunk)
     os.remove(tmp_payload)
     hdr_side = os.path.splitext(tmp_payload)[0] + ".hdr"
     if os.path.exists(hdr_side):

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core import vsi
 from ..raster.tiles import TILE_SCHEMA, encode_px
 
 _HEAD = 64 << 10
@@ -38,10 +39,8 @@ def infer_grid_head(path: str):
     cand = sorted(f for f in (glob.glob(os.path.join(path, "*"))
                               if os.path.isdir(path) else [path])
                   if not os.path.basename(f).startswith(("_", "."))
-                  and os.path.getsize(f) > 0)
-    f0 = cand[0]
-    with open(f0, "rb") as f:
-        head = f.read(_HEAD).decode("ascii", "replace")
+                  and vsi.fsize(f) > 0)
+    head = vsi.pread(cand[0], 0, _HEAD).decode("ascii", "replace")
     rows = []
     for line in head.splitlines()[:-1]:     # last line may be truncated
         toks = line.replace(",", " ").replace(";", " ").split()

@@ -10,6 +10,7 @@ format's sparse-store semantics."""
 
 from __future__ import annotations
 
+import gzip
 import json
 import os
 import zlib
@@ -18,7 +19,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..raster.tiles import TILE_SCHEMA, decode_px, encode_px
+from ..core import vsi
+from ..raster.tiles import (decode_px, encode_px, plane_tiles,
+                            tiles_from_tasks)
 
 _SEP = "."
 
@@ -71,8 +74,21 @@ def write_zarr(tiles_df: DataFrame, path: str, width: int, height: int,
 
 
 def read_zarr_metadata(path: str) -> dict:
-    with open(os.path.join(path, ".zarray")) as f:
-        return json.load(f)
+    return json.loads(vsi.read_all(os.path.join(path, ".zarray")))
+
+
+def _read_chunk(file: str, comp: str | None, dtype: np.dtype, shape,
+                fill, out_dt) -> np.ndarray:
+    """One chunk file -> `shape` array of `out_dt`; a chunk absent on
+    disk reads as fill_value (the sparse-store rule)."""
+    if not os.path.exists(file):
+        return np.full(shape, fill, out_dt)
+    buf = vsi.read_all(file)
+    if comp == "gzip":
+        buf = gzip.decompress(buf)
+    elif comp == "zlib":
+        buf = zlib.decompress(buf)
+    return np.frombuffer(buf, dtype=dtype).reshape(shape).astype(out_dt)
 
 
 # -- Zarr v3 (frmts/zarr/zarrv3array.cpp: zarr.json metadata, "c/"
@@ -82,8 +98,7 @@ def read_zarr3_metadata(array_dir: str) -> dict:
     """One v3 array node's zarr.json -> normalized dict (shape, chunks,
     dtype incl. the bytes-codec endian, fill_value, compressor name,
     chunk key encoding)."""
-    with open(os.path.join(array_dir, "zarr.json")) as f:
-        zj = json.load(f)
+    zj = json.loads(vsi.read_all(os.path.join(array_dir, "zarr.json")))
     if zj.get("zarr_format") != 3 or zj.get("node_type") != "array":
         raise ValueError(f"{array_dir}: not a zarr v3 array node")
     endian = "<"
@@ -120,11 +135,10 @@ def _read_zarr3_coord(group_dir: str, name: str):
         m = read_zarr3_metadata(adir)
         if len(m["shape"]) != 1:
             return None
-        buf = open(zarr3_chunk_path(adir, m["key_name"], m["key_sep"],
-                                    (0,)), "rb").read()
+        buf = vsi.read_all(zarr3_chunk_path(adir, m["key_name"],
+                                            m["key_sep"], (0,)))
         if m["compressor"] == "gzip":
-            import gzip as _gz
-            buf = _gz.decompress(buf)
+            buf = gzip.decompress(buf)
         elif m["compressor"] == "zlib":
             buf = zlib.decompress(buf)
         return np.frombuffer(buf, m["dtype"])[:m["shape"][0]]
@@ -149,9 +163,9 @@ def list_zarr3_arrays(store: str) -> dict:
     for root, _dirs, files in os.walk(store):
         if "zarr.json" not in files:
             continue
-        with open(os.path.join(root, "zarr.json")) as f:
-            if json.load(f).get("node_type") != "array":
-                continue
+        zj = json.loads(vsi.read_all(os.path.join(root, "zarr.json")))
+        if zj.get("node_type") != "array":
+            continue
         rel = os.path.relpath(root, store)
         out["/" + ("" if rel == "." else rel.replace(os.sep, "/"))
             .strip("/")] = root
@@ -165,8 +179,7 @@ def _read_zarr3(spark: SparkSession, path: str, band: int = 1,
     classic-open subdataset heuristic)."""
     if not os.path.exists(os.path.join(path, "zarr.json")):
         raise ValueError(f"{path}: no zarr.json")
-    with open(os.path.join(path, "zarr.json")) as f:
-        node = json.load(f)
+    node = json.loads(vsi.read_all(os.path.join(path, "zarr.json")))
     adir = path
     if node.get("node_type") == "group":
         arrays = list_zarr3_arrays(path)
@@ -236,43 +249,20 @@ def _read_zarr3(spark: SparkSession, path: str, band: int = 1,
         pd.DataFrame(work, columns=["ty", "tx", "file"]))
     dtype_name = np_dtype.newbyteorder("=").name
 
-    def read_task(batches):
-        import gzip as _gz
-        for pdf in batches:
-            out = []
-            for ty, tx, file in pdf.itertuples(index=False):
-                if os.path.exists(file):
-                    with open(file, "rb") as f:
-                        buf = f.read()
-                    if comp == "gzip":
-                        buf = _gz.decompress(buf)
-                    elif comp == "zlib":
-                        buf = zlib.decompress(buf)
-                    arr = np.frombuffer(buf, dtype=np_dtype) \
-                        .reshape(ch, cw) \
-                        .astype(np_dtype.newbyteorder("="))
-                else:
-                    arr = np.full((ch, cw), fill,
-                                  dtype=np_dtype.newbyteorder("="))
-                oy = int(ty)
-                if flip:
-                    arr = arr[::-1]
-                    oy = nty - 1 - oy
-                blk = np.zeros((ct, ct), arr.dtype)
-                blk[:ch, :cw] = arr
-                out.append((band, 0, int(tx), oy, dtype_name,
-                            None, encode_px(np.ascontiguousarray(blk))))
-            cols = [f.name for f in TILE_SCHEMA.fields]
-            yield (pd.DataFrame(out, columns=cols) if out
-                   else pd.DataFrame(columns=cols))
+    def decode(s):
+        arr = _read_chunk(s.file, comp, np_dtype, (ch, cw), fill,
+                          dtype_name)
+        if flip:
+            return plane_tiles(arr[::-1], band, s.tx, nty - 1 - s.ty, ct,
+                               dtype_name)
+        return plane_tiles(arr, band, s.tx, s.ty, ct, dtype_name)
 
     n_parts = max(1, min(len(work), 64))
     meta = {"shape": [h, w], "chunks": [ct, ct], "zarr_format": 3,
             "dtype": str(np_dtype), "fill_value": m["fill_value"],
             "attributes": m["attributes"], "flipped_y": flip,
             "geotransform": gt}
-    return wdf.repartition(n_parts).mapInPandas(read_task,
-                                                TILE_SCHEMA), meta
+    return tiles_from_tasks(wdf.repartition(n_parts), decode), meta
 
 
 def read_zarr(spark: SparkSession, path: str, band: int = 1,
@@ -303,29 +293,13 @@ def read_zarr(spark: SparkSession, path: str, band: int = 1,
 
     dtype_name = np_dtype.newbyteorder("=").name
 
-    def read_task(batches):
-        for pdf in batches:
-            out = []
-            for ty, tx, file in pdf.itertuples(index=False):
-                if os.path.exists(file):
-                    with open(file, "rb") as f:
-                        buf = f.read()
-                    if comp is not None:
-                        buf = zlib.decompress(buf)
-                    arr = np.frombuffer(buf, dtype=np_dtype) \
-                        .reshape(ct, ct).astype(np_dtype.newbyteorder("="))
-                else:
-                    arr = np.full((ct, ct), fill,
-                                  dtype=np_dtype.newbyteorder("="))
-                out.append((band, 0, int(tx), int(ty), dtype_name,
-                            None, encode_px(np.ascontiguousarray(arr))))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             TILE_SCHEMA.fields]) \
-                if out else pd.DataFrame(columns=[f.name for f in
-                                                  TILE_SCHEMA.fields])
+    def decode(s):
+        arr = _read_chunk(s.file, "zlib" if comp else None, np_dtype,
+                          (ct, ct), fill, dtype_name)
+        return plane_tiles(arr, band, s.tx, s.ty, ct, dtype_name)
 
     n_parts = max(1, min(len(work), 64))
-    return wdf.repartition(n_parts).mapInPandas(read_task, TILE_SCHEMA), meta
+    return tiles_from_tasks(wdf.repartition(n_parts), decode), meta
 
 
 def read_zarr_multidim(spark: SparkSession, path: str):
@@ -374,15 +348,8 @@ def read_zarr_multidim(spark: SparkSession, path: str):
             out = []
             for ci, file in pdf.itertuples(index=False):
                 ci = [int(k) for k in ci]
-                if os.path.exists(file):
-                    with open(file, "rb") as f:
-                        buf = f.read()
-                    if comp is not None:
-                        buf = zlib.decompress(buf)
-                    blk = np.frombuffer(buf, dtype=np_dtype) \
-                        .reshape(cd).astype(np.float64)
-                else:
-                    blk = np.full(cd, fill, np.float64)
+                blk = _read_chunk(file, "zlib" if comp else None,
+                                  np_dtype, cd, fill, np.float64)
                 # each lead combo inside this chunk emits one tile
                 lead_ranges = [range(ci[a] * cd[a],
                                      min((ci[a] + 1) * cd[a],

@@ -199,3 +199,20 @@ def test_gdal_footprint_cli(spark, tmp_path):
     import json
     counts = {json.loads(r.props)["n_pixels"] for r in back.collect()}
     assert {9, 24} <= counts
+
+
+def test_gdaladdo_ovr_keeps_source_dtype(spark, tmp_path):
+    """The .ovr sidecar keeps the source's sample type (uint8 here), and
+    its first level is the half-up 2x2 integer mean."""
+    from gdal_spark import cli
+    from gdal_spark.sources.geotiff import write_gtiff
+    arr = np.random.RandomState(6).randint(0, 256, (32, 32)) \
+        .astype(np.uint8)
+    src = str(tmp_path / "u8.tif")
+    write_gtiff(arr, src, tile=None, compression="none")
+    assert cli.main(["gdaladdo", src, "-tile", "8"]) == 0
+    assert read_ifd(src + ".ovr")["dtype"] == "uint8"
+    sums = arr.astype(np.int64).reshape(16, 2, 16, 2).sum(axis=(1, 3))
+    got = _read_level(spark, src + ".ovr", 0, 16)
+    assert got.dtype == np.uint8
+    np.testing.assert_array_equal(got, (sums + 2) // 4)

@@ -83,3 +83,41 @@ def test_jp2_in_nitf_golden_checksums(spark):
             w = min(m["tile"], m["width"] - x0)
             img[y0:y0 + h, x0:x0 + w] = arr[:h, :w]
         assert gdal_checksum(img) == want, f"band {band}"
+
+
+def test_m8_reads_only_its_segment(spark, tmp_path):
+    """IC=M8: a 4-byte IMDATOFF mask header precedes the codestream, so
+    the image data is LI - IMDATOFF bytes. The planned range ends at the
+    segment end, not in the bytes that follow it."""
+    from gdal_spark.raster.j2k import encode_j2k
+    from gdal_spark.raster.tiles import raster_to_tiles
+    src = np.random.RandomState(2).randint(0, 256, (40, 56)) \
+        .astype(np.uint8)
+    p = str(tmp_path / "nc.ntf")
+    N.write_nitf(raster_to_tiles(spark, src, tile=16), p, width=56,
+                 height=40, tile=16, dtype="u1")
+    data = open(p, "rb").read()
+    hdr = N.parse_nitf_header(data)
+    hl, (lish, li) = hdr["hl"], hdr["segments"][0]
+    sub = data[hl:hl + lish]
+    ic = sub.index(b"0NC1M ") + 1              # NICOM=0, IC, NBANDS=1
+    sub = sub[:ic] + b"M8" + b"    " + sub[ic + 2:]   # + COMRAT
+    seg = (4).to_bytes(4, "big") + encode_j2k(src, depth=8)
+    trailer = b"\xff\xd9" + b"\x00" * 62     # bytes after the segment
+    fl = hl + len(sub) + len(seg) + len(trailer)
+    lengths = f"{len(data):012d}{hl:06d}001{lish:06d}{li:010d}".encode()
+    assert data[:hl].count(lengths) == 1
+    head = data[:hl].replace(lengths, f"{fl:012d}{hl:06d}001"
+                             f"{len(sub):06d}{len(seg):010d}".encode())
+    m8 = str(tmp_path / "m8.ntf")
+    with open(m8, "wb") as f:
+        f.write(head + sub + seg + trailer)
+    t, m = N.read_nitf(spark, m8)
+    assert m["ic"] == "M8"
+    off, size = m["data_range"]
+    assert (off, off + size) == (hl + len(sub) + 4,
+                                 hl + len(sub) + len(seg))
+    rows = t.collect()
+    assert [r.band for r in rows] == [1]
+    got = decode_px(rows[0].px, rows[0].dtype, m["tile"])
+    np.testing.assert_array_equal(got[:40, :56], src)

@@ -12,10 +12,11 @@ from gdal_spark.sources.pam import apply_pam, read_pam, write_pam
 
 GCORE = "/root/reference/autotest/gcore/data"
 
-pytestmark = pytest.mark.skipif(not os.path.isdir(GCORE),
-                                reason="reference fixtures absent")
+needs_ref = pytest.mark.skipif(not os.path.isdir(GCORE),
+                               reason="reference fixtures absent")
 
 
+@needs_ref
 def test_reads_reference_georef_sidecar():
     # byte_nogeoref.tif.aux.xml: SRS LOCAL_CS["PAM"], GT 1..6
     pam = read_pam(os.path.join(GCORE, "byte_nogeoref.tif"))
@@ -23,12 +24,14 @@ def test_reads_reference_georef_sidecar():
     assert pam["geotransform"] == (1.0, 2.0, 3.0, 4.0, 5.0, 6.0)
 
 
+@needs_ref
 def test_reads_reference_metadata_domains():
     pam = read_pam(os.path.join(GCORE, "byte.pnm"))
     assert pam["metadata"][""] == {"other": "red", "key": "value"}
     assert "TestXML" in pam["metadata"]["xml:test"]
 
 
+@needs_ref
 def test_reads_reference_gcp_list():
     pam = read_pam(os.path.join(GCORE, "byte_gcp.tif"))
     assert pam["gcp_projection"] == 'LOCAL_CS["PAM"]'
@@ -36,6 +39,7 @@ def test_reads_reference_gcp_list():
                             "x": 0.0, "y": 0.0, "z": 0.0}]
 
 
+@needs_ref
 def test_apply_pam_overrides_driver_georef():
     """The reference's TryLoadXML order: PAM replaces the format's own
     geotransform/SRS."""
@@ -117,3 +121,30 @@ def test_gdal_raster_edit_writes_pam(spark, tmp_path, capsys):
     assert pam["srs"] == "EPSG:32633"
     assert pam["geotransform"] == (0.0, 10.0, 0.0, 100.0, 0.0, -10.0)
     assert pam["metadata"][""] == {"SENSOR": "alpha", "CLOUDS": "3"}
+
+
+@pytest.mark.parametrize("edit_first", [True, False])
+def test_edit_and_stats_merge_into_one_sidecar(spark, tmp_path, capsys,
+                                               edit_first):
+    """`gdal raster edit` and `gdalinfo -stats` each merge into the
+    sidecar: SRS, geotransform, metadata and statistics all survive, in
+    either order (the reference's PAM serializer keeps the dataset's
+    whole PAM state)."""
+    from gdal_spark import cli
+    from gdal_spark.sources.geotiff import write_gtiff
+
+    p = str(tmp_path / "m.tif")
+    write_gtiff(np.arange(200, dtype=np.uint8).reshape(10, 20), p)
+    edit = ["gdal", "raster", "edit", "--crs", "EPSG:32633",
+            "--bbox", "0,0,200,100", "--metadata", "SENSOR=alpha", p]
+    stats = ["gdalinfo", p, "-tile", "8", "-stats"]
+    for argv in ((edit, stats) if edit_first else (stats, edit)):
+        assert cli.main(argv) == 0
+    capsys.readouterr()
+    pam = read_pam(p)
+    assert pam["srs"] == "EPSG:32633"
+    assert pam["geotransform"] == (0.0, 10.0, 0.0, 100.0, 0.0, -10.0)
+    assert pam["metadata"][""] == {"SENSOR": "alpha"}
+    md = pam["bands"][1]["metadata"][""]
+    assert (md["STATISTICS_MINIMUM"], md["STATISTICS_MAXIMUM"]) == \
+        ("0.0", "199.0")

@@ -204,3 +204,24 @@ def test_rgb_tiles_band_planes(spark, tmp_path):
     for b in (1, 2, 3):
         assert np.array_equal(
             decode_px(rows[b].px, rows[b].dtype, 16), rgb[:, :, b - 1])
+
+
+def test_gray_tiles_fill_declared_bands(spark, tmp_path):
+    """BandsCount=3 over a gray PNG pyramid: every tile carries three
+    equal band planes, as many as meta['bands'] declares."""
+    img = _img(4)
+    write_xyz_pyramid(raster_to_tiles(spark, img, zoom=0, tile=16),
+                      str(tmp_path), tile=16)
+    cfg = _tms_xml(f"file://{tmp_path}/${{z}}/${{x}}/${{y}}.png", bands=3)
+    df, meta = read_tileservice(spark, cfg, level=0)
+    assert meta["bands"] == 3
+    per_tile = {}
+    for r in df.collect():
+        per_tile.setdefault((r.tile_x, r.tile_y), {})[r.band] = r.px
+    assert len(per_tile) == 12
+    for planes in per_tile.values():
+        assert sorted(planes) == [1, 2, 3]
+        assert planes[1] == planes[2] == planes[3]
+    for b in (1, 2, 3):
+        got = tiles_to_raster(df.where(f"band = {b}"), tile=16)
+        assert np.array_equal(got[:48, :64], img)

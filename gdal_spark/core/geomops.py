@@ -58,17 +58,6 @@ def envelopes(wkbs: Sequence[Optional[bytes]]) -> np.ndarray:
     return out
 
 
-def env_intersects(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Row-wise envelope intersection test on (n,4) arrays."""
-    return ~((a[:, 0] > b[:, 2]) | (b[:, 0] > a[:, 2]) |
-             (a[:, 1] > b[:, 3]) | (b[:, 1] > a[:, 3]))
-
-
-def env_contains(outer: np.ndarray, inner: np.ndarray) -> np.ndarray:
-    return ((outer[:, 0] <= inner[:, 0]) & (outer[:, 1] <= inner[:, 1]) &
-            (outer[:, 2] >= inner[:, 2]) & (outer[:, 3] >= inner[:, 3]))
-
-
 # ---------------------------------------------------------------------------
 # point-in-polygon (ray casting, even-odd) — fully vectorized
 # ---------------------------------------------------------------------------

@@ -193,21 +193,6 @@ def hilbert_u32(x, y):
     return (i1 << 1) | i0
 
 
-def hilbert_of_envelope(cx, cy, minx, miny, width, height):
-    """Hilbert value of envelope centers scaled into the 16-bit grid
-    (packedrtree.cpp hilbert(NodeItem,...))."""
-    hmax = float((1 << 16) - 1)
-    cx = np.asarray(cx, dtype=np.float64)
-    cy = np.asarray(cy, dtype=np.float64)
-    x = np.zeros(cx.shape, dtype=np.uint32)
-    y = np.zeros(cy.shape, dtype=np.uint32)
-    if width != 0.0:
-        x = np.floor(hmax * (cx - minx) / width).astype(np.uint32)
-    if height != 0.0:
-        y = np.floor(hmax * (cy - miny) / height).astype(np.uint32)
-    return hilbert_u32(x, y)
-
-
 # ---------------------------------------------------------------------------
 # cell covers (geometry -> list of covering cells) — used by the spatial join
 # ---------------------------------------------------------------------------

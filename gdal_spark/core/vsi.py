@@ -50,7 +50,9 @@ _BACKENDS: dict[str, tuple] = {
 def register_backend(scheme: str, pread_fn, fsize_fn) -> None:
     """Install a ranged-read backend for `scheme://` paths.
     pread_fn(path, offset, size) -> bytes (short read allowed at EOF);
-    fsize_fn(path) -> int."""
+    fsize_fn(path) -> int, raising FileNotFoundError when nothing is at
+    `path` — that is how readers tell an absent object (e.g. a sparse
+    Zarr chunk, `exists`) from an IO failure."""
     _BACKENDS[scheme.lower()] = (pread_fn, fsize_fn)
 
 
@@ -82,6 +84,15 @@ def fsize(path: str) -> int:
     except KeyError:
         raise ValueError(f"no IO backend registered for {scheme}://")
     return fn(p)
+
+
+def exists(path: str) -> bool:
+    """Whether the backend has an object at `path`."""
+    try:
+        fsize(path)
+    except FileNotFoundError:
+        return False
+    return True
 
 
 def pread_many(path: str, spans: list) -> list:

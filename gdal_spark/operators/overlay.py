@@ -233,7 +233,7 @@ def _reverse_leftovers(subject: DataFrame, method: DataFrame, mid_col: str,
     fold_schema = T.StructType([T.StructField("_mid", T.LongType()),
                                 T.StructField("geom", T.BinaryType())])
 
-    def fold_part(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold_part(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         """m \\ union(bucket subjects) for one (mid, salt) bucket."""
         m_ids, m_kernels, _e = bc.value
         mid = int(key[0])
@@ -253,7 +253,7 @@ def _reverse_leftovers(subject: DataFrame, method: DataFrame, mid_col: str,
             return pd.DataFrame(columns=["_mid", "geom"])
         return pd.DataFrame([(mid, wkb.encode(g))], columns=["_mid", "geom"])
 
-    def fold_meet(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold_meet(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         """Intersect the per-bucket partials: m\\(A∪B) = (m\\A) ∩ (m\\B).
         A mid missing a bucket's row means that bucket emptied the method
         — the whole difference is empty too ONLY if a partial is empty,
@@ -390,7 +390,7 @@ def overlay_join(subject: DataFrame, method: DataFrame, mode: str,
         salted = pairs.withColumn(
             "_salt", F.pmod(F.xxhash64(other_geom), F.lit(salt)))
 
-        def fold_part(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fold_part(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             ob = bytes(pdf.iloc[0][own_geom])
             g = wkb.decode_cached(ob)
             first = True
@@ -406,7 +406,7 @@ def overlay_join(subject: DataFrame, method: DataFrame, mode: str,
             return pd.DataFrame([(key[0], wkb.encode(g))],
                                 columns=[key_col_name, "geom"])
 
-        def fold_meet(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fold_meet(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             n = int(pdf.iloc[0]["_nbuckets"])
             if len(pdf) < n:
                 return pd.DataFrame(columns=[key_col_name, "geom"])
@@ -462,7 +462,7 @@ def overlay_join(subject: DataFrame, method: DataFrame, mode: str,
         T.StructField(sid_col, sid_t), T.StructField(mid_col, mid_t),
         T.StructField("geom", T.BinaryType())])
 
-    def clip_fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def clip_fold(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         gs = wkb.decode(bytes(pdf.iloc[0]["s_geom"]))
         pieces = []
         for b in pdf["m_geom"].values:

@@ -12,6 +12,9 @@ Naming: q_* functions take (spark, sf_dir) and return a DataFrame.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -676,7 +679,7 @@ def q_polygonize_density(spark, sf_dir):
            .withColumn("tile_x", F.shiftright("x", 3))
            .withColumn("tile_y", F.shiftright("y", 3)))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.int64)
         arr[pdf["y"].values & 7, pdf["x"].values & 7] = pdf["v"].values
         return pd.DataFrame([(1, 0, int(key[0]), int(key[1]), "int64", 0.0,
@@ -1013,7 +1016,7 @@ def q_proximity_density(spark, sf_dir):
            .withColumn("tile_x", F.shiftright("x", 3))
            .withColumn("tile_y", F.shiftright("y", 3)))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.int64)
         arr[pdf["y"].values & 7, pdf["x"].values & 7] = 1
         return pd.DataFrame([(1, 0, int(key[0]), int(key[1]), "int64", None,
@@ -1098,7 +1101,7 @@ def q_contour_density(spark, sf_dir):
            .withColumn("tile_x", F.shiftright("x", 3))
            .withColumn("tile_y", F.shiftright("y", 3)))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.float64)
         arr[pdf["y"].values & 7, pdf["x"].values & 7] = 1.0
         return pd.DataFrame([(1, 0, int(key[0]), int(key[1]), "float64",
@@ -1790,7 +1793,7 @@ def q_warp_average(spark, sf_dir):
         .withColumn("tile_x", F.shiftright("x", 3)) \
         .withColumn("tile_y", F.shiftright("y", 3))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.float64)
         np.add.at(arr, (pdf["y"].values & 7, pdf["x"].values & 7),
                   pdf["v"].values)
@@ -2056,7 +2059,7 @@ def q_polygonize_rings_density(spark, sf_dir):
            .withColumn("tile_x", F.shiftright("x", 3))
            .withColumn("tile_y", F.shiftright("y", 3)))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.int64)
         arr[pdf["y"].values & 7, pdf["x"].values & 7] = pdf["v"].values
         return pd.DataFrame([(1, 0, int(key[0]), int(key[1]), "int64", 0.0,
@@ -2123,7 +2126,7 @@ def _density_tiles_full(spark, sf_dir):
         .withColumn("tile_x", F.shiftright("x", 3)) \
         .withColumn("tile_y", F.shiftright("y", 3))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.float64)
         np.add.at(arr, (pdf["y"].values & 7, pdf["x"].values & 7),
                   pdf["v"].values)
@@ -2133,6 +2136,67 @@ def _density_tiles_full(spark, sf_dir):
 
     return cells.groupBy("tile_x", "tile_y").applyInPandas(build,
                                                            TILE_SCHEMA)
+
+
+def _tmp(name):
+    """Scratch path `gdal_spark_<pid>_<name>` in the system temp dir — one
+    per query and driver process, so concurrent drivers never collide."""
+    return os.path.join(tempfile.gettempdir(),
+                        f"gdal_spark_{os.getpid()}_{name}")
+
+
+def _xyz(tiles, name="v"):
+    """gdal2xyz of an 8-px tile table as (x, y, <name>) rows — the shape
+    every density round trip compares against `_DENSITY_XY_SQL`."""
+    from .raster.tiles import gdal2xyz
+    return gdal2xyz(tiles, tile=8).select(F.col("x").cast("long").alias("x"),
+                                          F.col("y").cast("long").alias("y"),
+                                          F.col("value").alias(name))
+
+
+def _density_roundtrip(spark, sf_dir, write, read, shift=0.0):
+    """Format round trip of the density raster: `write(tiles)` stores it,
+    `read()` returns the tile table read back, and the result is its
+    (x, y, v) rows. A nonzero `shift` is added to every sample first
+    (-8 puts negative values through signed-sample containers)."""
+    t = _density_tiles_full(spark, sf_dir)
+    if shift:
+        from .raster.tiles import decode_px
+
+        def add(batches):
+            for pdf in batches:
+                yield pdf.assign(dtype="f8", px=[
+                    (decode_px(p, d, 8) + shift).tobytes()
+                    for p, d in zip(pdf["px"], pdf["dtype"])])
+
+        t = t.mapInPandas(add, t.schema)
+    write(t)
+    return _xyz(read())
+
+
+def _point_layer(spark, sf_dir, every):
+    """(doc_id, geom) point layer of every `every`-th page; the WKB POINTs
+    come from `wkb.encode_points_batch`, one buffer per Arrow batch."""
+    from .core import wkb as _wkb
+
+    @F.pandas_udf("binary")
+    def geom(lon, lat):
+        import numpy as np
+        import pandas as pd
+        return pd.Series(_wkb.encode_points_batch(
+            np.stack([lon.to_numpy(), lat.to_numpy()], axis=1)))
+
+    return datagen.points(spark, sf_dir) \
+        .where(F.col("doc_id") % every == 0) \
+        .select("doc_id", geom("lon", "lat").alias("geom"))
+
+
+def _lonlat(df, key, *rest, names=("lon_r", "lat_r")):
+    """Read-back select of a point-layer round trip: `key`, the point's
+    x and y rounded to 9 places (as `names`), then `rest`."""
+    px, py = _pxy_udfs()
+    return df.select(key, F.round(px("geom"), 9).alias(names[0]),
+                     F.round(py("geom"), 9).alias(names[1]), *rest)
 
 
 _DENSITY_VALS_SQL = f"""
@@ -2145,6 +2209,8 @@ g AS (SELECT gx.range AS x, gy.range AS y FROM range(64) gx, range(64) gy),
 vals AS (SELECT CAST(COALESCE(c.v, 0) AS DOUBLE) AS v
          FROM g LEFT JOIN c ON c.x = g.x AND c.y = g.y)
 """
+_DENSITY_XY_SQL = _DENSITY_VALS_SQL.replace("vals AS (SELECT",
+                                            "vals AS (SELECT g.x, g.y,")
 
 
 @_reg("raster_stats", _DENSITY_VALS_SQL + """
@@ -2203,9 +2269,7 @@ def q_line_dedup(spark, sf_dir):
     return textops.line_dedup(_t(spark, sf_dir, "documents"), min_count=2)
 
 
-@_reg("band_calc", _DENSITY_VALS_SQL.replace("vals AS (SELECT",
-                                             """vals AS (SELECT g.x, g.y,""")
-      + """
+@_reg("band_calc", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        ROUND(sqrt(v) + 2.0 * v, 6) AS val_r
 FROM vals WHERE v > 0
@@ -2349,7 +2413,7 @@ def q_warp_near_mercator(spark, sf_dir):
            .withColumn("tile_x", F.shiftright("x", 3))
            .withColumn("tile_y", F.shiftright("y", 3)))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.float64)
         arr[pdf["y"].values & 7, pdf["x"].values & 7] = pdf["v"].values
         return pd.DataFrame([(1, 0, int(key[0]), int(key[1]), "float64",
@@ -2392,10 +2456,6 @@ def q_warp_near_mercator(spark, sf_dir):
 # (sieve, fillnodata, DEM suite, color-relief, viewshed, pansharpen,
 #  footprint, mosaic, rtranslate, sub-pixel contour bands)
 # =============================================================================
-
-_DENSITY_XY_SQL = _DENSITY_VALS_SQL.replace("vals AS (SELECT",
-                                            "vals AS (SELECT g.x, g.y,")
-
 
 def _pxy_udfs():
     """(px, py) pandas UDFs extracting point coordinates from WKB via the
@@ -2695,7 +2755,6 @@ def q_pansharpen_brovey(spark, sf_dir):
     (v, v+3) with pan = their SUM -> ratio pan/pseudo_pan = 2 exactly, so
     out_i = 2*ms_i wherever pseudo_pan != 0 (else 0) — the Brovey identity
     law, recomputed in SQL."""
-    import numpy as np
     import pandas as pd
     from .raster.mosaic import pansharpen
     from .raster.tiles import TILE_SCHEMA, decode_px, encode_px
@@ -2830,7 +2889,6 @@ def q_viewshed_cone(spark, sf_dir):
     (azimuth bucketing, radius sort, running-max scan) end to end."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
     from .raster.dem import viewshed
     from .raster.tiles import TILE_SCHEMA, encode_px
 
@@ -2840,7 +2898,7 @@ def q_viewshed_cone(spark, sf_dir):
     tile_ids = spark.range(8).select(F.col("id").alias("tile_x")) \
         .crossJoin(spark.range(8).select(F.col("id").alias("tile_y")))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         jj, ii = np.meshgrid(np.arange(8), np.arange(8), indexing="ij")
         gx = tx * 8 + ii + 0.5
@@ -3011,30 +3069,12 @@ def q_shp_roundtrip(spark, sf_dir):
     collect of features) and read back through the byte-range
     distributed parser; the oracle recomputes the same (doc_id, lon,
     lat) set from the table."""
-    import tempfile
-    import os
-    import numpy as np
-    import pandas as pd
-    from .core import wkb as _wkb
     from .sources.shapefile import read_shapefile, write_shapefile_dist
 
-    @F.pandas_udf("binary")
-    def mk(lon, lat):
-        return pd.Series(_wkb.encode_points_batch(
-            np.stack([lon.values, lat.values], axis=1)))
-
-    layer = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
-        .select(mk("lon", "lat").alias("geom"), F.col("doc_id"))
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_shp_{os.getpid()}")
-    write_shapefile_dist(layer, base)
+    base = _tmp("shp")
+    write_shapefile_dist(_point_layer(spark, sf_dir, 7), base)
     out = read_shapefile(spark, base, features_per_task=512)
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"))
+    return _lonlat(out, "doc_id")
 
 
 @_reg("fgb_bbox_read", f"""
@@ -3055,31 +3095,13 @@ def q_fgb_bbox_read(spark, sf_dir):
     DISTRIBUTED sink (write_fgb_dist — distributed Hilbert sort, per-task
     feature + leaf-node pwrite, healed 16-group upper levels) instead of
     a driver rows list."""
-    import tempfile
-    import os
-    import numpy as np
-    import pandas as pd
-    from .core import wkb as _wkb
     from .sources.flatgeobuf import read_fgb, write_fgb_dist
 
-    @F.pandas_udf("binary")
-    def mk(lon, lat):
-        return pd.Series(_wkb.encode_points_batch(
-            np.stack([lon.values, lat.values], axis=1)))
-
-    layer = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
-        .select(mk("lon", "lat").alias("geom"), F.col("doc_id"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_fgb_{os.getpid()}.fgb")
-    write_fgb_dist(layer, path)
+    path = _tmp("fgb.fgb")
+    write_fgb_dist(_point_layer(spark, sf_dir, 7), path)
     out = read_fgb(spark, path, bbox=(-50.0, -40.0, 60.0, 40.0),
                    features_per_task=512)
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"))
+    return _lonlat(out, "doc_id")
 
 
 # =============================================================================
@@ -3433,7 +3455,6 @@ def q_st_transform_lcc(spark, sf_dir):
 
 def _aea5070_sql():
     from .raster import transforms as _tr
-    import numpy as _np
     n, c, rho0 = _tr.aea_constants(23.0, 29.5, 45.5)
     n, c, rho0 = _crs_lit(n), _crs_lit(c), _crs_lit(rho0)
     one_m_e2 = _crs_lit(1.0 - _tr._E2)
@@ -3976,7 +3997,6 @@ def _geos_sql():
     h * atan scan angles. Rows are kept to the |lon| <= 60,
     |lat| <= 60 box — comfortably inside the visible disc in both
     engines (the limb is at ~81 deg great-circle angle)."""
-    import numpy as _np
     from .raster import transforms as _tr
     d2r = _CONIC_D2R
     _a, _f = _tr.ELLIPSOIDS["WGS84"]
@@ -4114,7 +4134,7 @@ def q_warp_albers_conus(spark, sf_dir):
            .withColumn("tile_x", F.shiftright("x", 3))
            .withColumn("tile_y", F.shiftright("y", 3)))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.float64)
         arr[pdf["y"].values & 7, pdf["x"].values & 7] = pdf["v"].values
         return pd.DataFrame([(1, 0, int(key[0]), int(key[1]), "float64",
@@ -4227,7 +4247,7 @@ def q_warp_ease_grid(spark, sf_dir):
            .withColumn("tile_x", F.shiftright("x", 3))
            .withColumn("tile_y", F.shiftright("y", 3)))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros((8, 8), np.float64)
         arr[pdf["y"].values & 7, pdf["x"].values & 7] = pdf["v"].values
         return pd.DataFrame([(1, 0, int(key[0]), int(key[1]), "float64",
@@ -4300,8 +4320,6 @@ def q_gtiff_ingest(spark, sf_dir):
     (sources/geotiff.py) decodes it back into engine tiles, and every
     pixel must match the SQL-recomputed counts — replacing the
     driver-side raster_to_tiles fixture path with a real source."""
-    import os
-    import tempfile
     import numpy as np
     from .raster.tiles import decode_px
     from .sources.geotiff import read_gtiff, write_gtiff
@@ -4312,8 +4330,7 @@ def q_gtiff_ingest(spark, sf_dir):
         px = decode_px(r.px, r.dtype, 8)
         arr[r.tile_y * 8:(r.tile_y + 1) * 8,
             r.tile_x * 8:(r.tile_x + 1) * 8] = px
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_ingest_{os.getpid()}.tif")
+    path = _tmp("ingest.tif")
     write_gtiff(arr, path, tile=None, compression="deflate",
                 geotransform=(-180.0, 5.625, 0.0, 90.0, 0.0, -2.8125))
     tiles = read_gtiff(spark, path, tile=8)
@@ -4380,14 +4397,13 @@ def q_los_wall(spark, sf_dir):
     uses)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
     from .raster.dem import los
     from .raster.tiles import TILE_SCHEMA, encode_px
 
     tile_ids = spark.range(8).select(F.col("id").alias("tile_x")) \
         .crossJoin(spark.range(8).select(F.col("id").alias("tile_y")))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         jj, ii = np.meshgrid(np.arange(8), np.arange(8), indexing="ij")
         arr = np.where(tx * 8 + ii == 20, 70.0, 0.0)
@@ -4521,29 +4537,16 @@ def q_gpkg_roundtrip(spark, sf_dir):
     page writes into a .gpkg feature table and reads back through the
     rowid-range distributed reader; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.gpkg import read_gpkg, write_gpkg
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
-        .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpkg_{os.getpid()}.gpkg")
+    path = _tmp("gpkg.gpkg")
     if os.path.exists(path):
         os.unlink(path)
-    rows = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                   [np.array([[r.lon, r.lat]])])),
-             {"doc_id": int(r.doc_id)}) for r in pts]
-    write_gpkg(rows, path, table="pages", geometry_type="POINT")
+    pts = _point_layer(spark, sf_dir, 7).orderBy("doc_id").collect()
+    write_gpkg([(bytes(r.geom), {"doc_id": r.doc_id}) for r in pts], path,
+               table="pages", geometry_type="POINT")
     out = read_gpkg(spark, path, rows_per_task=64)
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"))
+    return _lonlat(out, "doc_id")
 
 
 @_reg("ogrinfo_summary", f"""
@@ -4559,21 +4562,9 @@ def q_ogrinfo_summary(spark, sf_dir):
     """ogrinfo -so twin (apps/ogrinfo_lib.cpp ReportOnLayer): feature
     count, promoted geometry type, extent and field list in one partial
     pass + combine; the oracle recomputes count/extent in SQL."""
-    import numpy as np
-    from .core import wkb as _wkb
     from .operators.info import layer_info
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 3 == 0)
-
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
-    out = layer_info(layer, name="pages")
+    out = layer_info(_point_layer(spark, sf_dir, 3), name="pages")
     return out.select("layer", "feature_count", "n_null_geom", "geom_type",
                       F.round("minx", 9).alias("minx_r"),
                       F.round("miny", 9).alias("miny_r"),
@@ -4616,35 +4607,13 @@ def q_arrow_ipc_roundtrip(spark, sf_dir):
     part files (distributed pyarrow sink), read back through
     record-batch-range tasks planned from footers alone; the oracle
     recomputes the same (doc_id, lon, lat) set from the source table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.arrow_ipc import read_arrow_ipc, write_arrow_ipc
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 7 == 0) \
-        .select("doc_id", "lon", "lat")
-
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_arrow_{os.getpid()}")
+    path = _tmp("arrow")
     shutil.rmtree(path, ignore_errors=True)
-    write_arrow_ipc(layer, path)
+    write_arrow_ipc(_point_layer(spark, sf_dir, 7), path)
     out, _meta = read_arrow_ipc(spark, path, batches_per_task=4)
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"))
+    return _lonlat(out, "doc_id")
 
 
 @_reg("kml_roundtrip", f"""
@@ -4659,35 +4628,15 @@ def q_kml_roundtrip(spark, sf_dir):
     written as per-partition KML documents and read back through the
     namespace-agnostic distributed parser; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.kml import read_kml, write_kml
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 17 == 0)
-
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_kml_{os.getpid()}")
+    path = _tmp("kml")
     shutil.rmtree(path, ignore_errors=True)
-    write_kml(layer, path, name_col=None, props_col=None)
-    out = read_kml(spark, path)
-
-    px, py = _pxy_udfs()
-
-    return out.select(
-        F.get_json_object("props", "$.doc_id").cast("long").alias("doc_id"),
-        F.round(px("geom"), 9).alias("lon_r"),
-        F.round(py("geom"), 9).alias("lat_r"))
+    write_kml(_point_layer(spark, sf_dir, 17), path, name_col=None,
+              props_col=None)
+    return _lonlat(read_kml(spark, path),
+                   F.get_json_object("props", "$.doc_id").cast("long")
+                   .alias("doc_id"))
 
 
 @_reg("gml_roundtrip", f"""
@@ -4702,35 +4651,14 @@ def q_gml_roundtrip(spark, sf_dir):
     as per-partition documents and read back through the
     namespace-agnostic distributed parser; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.gml import read_gml, write_gml
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
-
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select("doc_id", ptgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gml_{os.getpid()}")
+    path = _tmp("gml")
     shutil.rmtree(path, ignore_errors=True)
-    write_gml(layer, path, props_col=None)
-    out = read_gml(spark, path)
-
-    px, py = _pxy_udfs()
-
-    return out.select(
-        F.get_json_object("props", "$.doc_id").cast("long").alias("doc_id"),
-        F.round(px("geom"), 9).alias("lon_r"),
-        F.round(py("geom"), 9).alias("lat_r"))
+    write_gml(_point_layer(spark, sf_dir, 19), path, props_col=None)
+    return _lonlat(read_gml(spark, path),
+                   F.get_json_object("props", "$.doc_id").cast("long")
+                   .alias("doc_id"))
 
 
 @_reg("geoparquet_bbox", f"""
@@ -4751,9 +4679,6 @@ def q_geoparquet_bbox(spark, sf_dir):
     applies plain comparisons on the stored struct column — row-group
     stats prune, Catalyst pushes down. The oracle recomputes the rectangle
     intersection in SQL from the source table."""
-    import os
-    import shutil
-    import tempfile
     from .core import wkb as _wkb
     from .sources.geoparquet import read_geoparquet, write_geoparquet
 
@@ -4767,8 +4692,7 @@ def q_geoparquet_bbox(spark, sf_dir):
                           for x, y in zip(lon, lat)])
 
     layer = pts.select("doc_id", boxgeom("lon", "lat").alias("geom"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpq_{os.getpid()}")
+    path = _tmp("gpq")
     shutil.rmtree(path, ignore_errors=True)
     write_geoparquet(layer, path)
     out, _meta = read_geoparquet(spark, path,
@@ -4791,14 +4715,10 @@ def q_zarr_roundtrip(spark, sf_dir):
     zlib-compressed chunked store (one task per chunk, driver writes only
     .zarray JSON) and read back through chunk-planned tasks; the oracle
     regenerates the pixel values in SQL."""
-    import os
-    import shutil
-    import tempfile
     from .sources.zarr import read_zarr, write_zarr
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_zarr_{os.getpid()}.zarr")
+    path = _tmp("zarr.zarr")
     shutil.rmtree(path, ignore_errors=True)
     write_zarr(t, path, width=64, height=64, tile=8)
     out, _meta = read_zarr(spark, path)
@@ -4813,12 +4733,7 @@ def q_gdal2xyz_vals(spark, sf_dir):
     """gdal2xyz twin (osgeo_utils/gdal2xyz.py): the tile table exploded
     to one (x, y, value) row per pixel — map-only, no shuffle; the oracle
     regenerates the same density values in SQL."""
-    from .raster.tiles import gdal2xyz
-    t = _density_tiles_full(spark, sf_dir)
-    out = gdal2xyz(t, tile=8)
-    return out.select(F.col("x").cast("long").alias("x"),
-                      F.col("y").cast("long").alias("y"),
-                      F.col("value").alias("val_r"))
+    return _xyz(_density_tiles_full(spark, sf_dir), "val_r")
 
 
 @_reg("gdalcompare_report", _DENSITY_VALS_SQL + """
@@ -4855,8 +4770,6 @@ def q_vrt_mosaic(spark, sf_dir):
     read back through the warp-backed SimpleSource path — the later input
     wins the overlap (last-on-top), so the oracle is v left of x=24 and
     3v from there on."""
-    import os
-    import tempfile
     import numpy as np
     from .raster.tiles import tiles_to_raster
     from .raster.vrt import build_vrt, read_vrt
@@ -4864,8 +4777,7 @@ def q_vrt_mosaic(spark, sf_dir):
 
     t = _density_tiles_full(spark, sf_dir)
     arr = tiles_to_raster(t, tile=8)[:64, :64]    # tiny fixture raster
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_vrt_{os.getpid()}")
+    base = _tmp("vrt")
     os.makedirs(base, exist_ok=True)
     pa, pb = os.path.join(base, "a.tif"), os.path.join(base, "b.tif")
     # A: x [0,40); B (wins the [24,40) overlap): x [24,64), tripled
@@ -5050,15 +4962,11 @@ def q_gtiff_tindex(spark, sf_dir):
     through the geotransform corners in the reference's order. Returns the
     envelope plus ST_Area of the footprint polygon; the oracle is the
     closed form of the fixtures' geotransforms."""
-    import os
-    import tempfile
-
     import numpy as np
 
     from .sources.geotiff import tile_index, write_gtiff
 
-    d = os.path.join(tempfile.gettempdir(),
-                     f"gdal_spark_tindex_{os.getpid()}")
+    d = _tmp("tindex")
     os.makedirs(d, exist_ok=True)
     paths = []
     for i in range(6):
@@ -5359,10 +5267,6 @@ def q_mvt_tile_roundtrip(spark, sf_dir):
     the XYZ tile and the quantized tile-local integer pixel coords
     closed-form. extent=256 keeps a quantization pixel ~2.4 km at z6, far
     above any numpy-vs-DuckDB transcendental ULP wobble."""
-    import os
-    import shutil
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -5379,9 +5283,7 @@ def q_mvt_tile_roundtrip(spark, sf_dir):
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 3 == 0)
     df = pts.select(F.col("doc_id").alias("fid"),
                     mk_geom("lon", "lat").alias("geom"))
-    out = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_mvt_{os.getpid()}_"
-                       f"{abs(hash(sf_dir)) % 10**8}")
+    out = _tmp(f"mvt_{abs(hash(sf_dir)) % 10**8}")
     shutil.rmtree(out, ignore_errors=True)
     _mvt.write_mvt(df, out, zoom=_MVT_Z, layer="pages",
                    extent=_MVT_EXTENT).collect()
@@ -5403,41 +5305,19 @@ def q_gpx_roundtrip(spark, sf_dir):
     doc_id <name>, written as per-partition GPX documents and read back
     through the waypoints layer of the distributed parser; the oracle
     recomputes the same (doc_id, lon, lat, ele) set from the table."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.gpx import read_gpx, write_gpx
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 13 == 0)
-
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select(ptgeom("lon", "lat").alias("geom"),
-                       F.col("doc_id").cast("string").alias("name"),
-                       (F.col("doc_id").cast("double") / 10.0).alias("ele"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpx_{os.getpid()}")
+    layer = _point_layer(spark, sf_dir, 13).select(
+        "geom", F.col("doc_id").cast("string").alias("name"),
+        (F.col("doc_id").cast("double") / 10.0).alias("ele"))
+    path = _tmp("gpx")
     shutil.rmtree(path, ignore_errors=True)
     write_gpx(layer, path)
     out = read_gpx(spark, path).where(F.col("layer") == "waypoints")
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("name").cast("long").alias("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"),
-                      F.col("ele"))
+    return _lonlat(out, F.col("name").cast("long").alias("doc_id"), "ele")
 
 
-@_reg("aaigrid_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("aaigrid_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -5447,25 +5327,16 @@ def q_aaigrid_roundtrip(spark, sf_dir):
     fixed-width parallel pwrite sink (%.17g — bit-exact float64) and reads
     back through the byte-range line-planned parser; the oracle recomputes
     every cell value from the pages table."""
-    import os
-    import shutil
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.aaigrid import read_aaigrid, write_aaigrid
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_aai_{os.getpid()}.asc")
-    write_aaigrid(t, path, width_px=64, height_px=64, tile=8)
-    back = read_aaigrid(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    path = _tmp("aai.asc")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_aaigrid(t, path, width_px=64, height_px=64, tile=8),
+        lambda: read_aaigrid(spark, path, tile=8))
 
 
-@_reg("xyz_raster_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("xyz_raster_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(63 - y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -5475,26 +5346,17 @@ def q_xyz_raster_roundtrip(spark, sf_dir):
     inference (spacing from the head block, extent from one min/max agg).
     gdal2xyz's y is the row index, and read_xyz re-anchors the top at max
     y, so the raster comes back flipped — the oracle flips y in SQL."""
-    import os
-    import shutil
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.xyzraster import read_xyz, write_xyz
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_xyzr_{os.getpid()}")
+    path = _tmp("xyzr")
     shutil.rmtree(path, ignore_errors=True)
-    write_xyz(t, path, tile=8)
-    back, grid = read_xyz(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_xyz(t, path, tile=8),
+        lambda: read_xyz(spark, path, tile=8)[0])
 
 
-@_reg("png_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("png_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v
 FROM vals
@@ -5506,20 +5368,13 @@ def q_png_roundtrip(spark, sf_dir):
     driver) and re-reads through the filter-reconstructing decoder; the
     oracle recomputes every cell, clamped on the Byte cast exactly like
     GDALCopyWords."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.png import read_png, write_png
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_png_{os.getpid()}.png")
-    write_png(t, path, width_px=64, height_px=64, tile=8)
-    back = read_png(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    path = _tmp("png.png")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_png(t, path, width_px=64, height_px=64, tile=8),
+        lambda: read_png(spark, path, tile=8))
 
 
 @_reg("gdallocationinfo_vals", f"""
@@ -5671,35 +5526,14 @@ def q_dxf_roundtrip(spark, sf_dir):
     every 19th page becomes a POINT entity on a layer named by its doc_id,
     written as per-partition minimal DXF documents and read back through
     the group-code parser; the oracle recomputes the same point set."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.dxf import read_dxf, write_dxf
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
-
-    @F.pandas_udf("binary")
-    def ptgeom(lon, lat):
-        import pandas as pd
-        return pd.Series([
-            _wkb.encode(_wkb.Geom(_wkb.POINT, [np.array([[x, y]])]))
-            for x, y in zip(lon, lat)])
-
-    layer = pts.select(ptgeom("lon", "lat").alias("geom"),
-                       F.col("doc_id").cast("string").alias("layer"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_dxf_{os.getpid()}")
+    path = _tmp("dxf")
     shutil.rmtree(path, ignore_errors=True)
-    write_dxf(layer, path)
-    out = read_dxf(spark, path)
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("layer").cast("long").alias("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"))
+    write_dxf(_point_layer(spark, sf_dir, 19).select(
+        "geom", F.col("doc_id").cast("string").alias("layer")), path)
+    return _lonlat(read_dxf(spark, path),
+                   F.col("layer").cast("long").alias("doc_id"))
 
 
 @_reg("span_dedup", """
@@ -5759,8 +5593,7 @@ def q_pq_codes(spark, sf_dir):
     return pq_encode(emb, cbs)
 
 
-@_reg("envi_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("envi_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -5771,20 +5604,14 @@ def q_envi_roundtrip(spark, sf_dir):
     byte-range tasks (no per-scanline loop, unlike RawRasterBand); the
     oracle recomputes every cell from the pages table. float64 binary is
     bit-exact by construction."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.rawraster import read_envi, write_envi
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_envi_{os.getpid()}.dat")
-    write_envi(t, path, samples=64, lines=64, dtype="f8", tile=8)
-    back, _ = read_envi(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    path = _tmp("envi.dat")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_envi(t, path, samples=64, lines=64, dtype="f8",
+                             tile=8),
+        lambda: read_envi(spark, path, tile=8)[0])
 
 
 @_reg("c4_filters", """
@@ -5945,29 +5772,16 @@ def q_spatialite_roundtrip(spark, sf_dir):
     + SRID + exact MBR + class body) and reads back through the
     rowid-range distributed reader; the oracle recomputes the same
     (doc_id, lon, lat) set from the source table."""
-    import os
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.spatialite import read_spatialite, write_spatialite
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 11 == 0) \
-        .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_slite_{os.getpid()}.sqlite")
+    path = _tmp("slite.sqlite")
     if os.path.exists(path):
         os.unlink(path)
-    rows = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                   [np.array([[r.lon, r.lat]])])),
-             {"doc_id": int(r.doc_id)}) for r in pts]
-    write_spatialite(rows, path, table="pages", geometry_type="POINT")
+    pts = _point_layer(spark, sf_dir, 11).orderBy("doc_id").collect()
+    write_spatialite([(bytes(r.geom), {"doc_id": r.doc_id}) for r in pts],
+                     path, table="pages", geometry_type="POINT")
     out = read_spatialite(spark, path, rows_per_task=64)
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"))
+    return _lonlat(out, "doc_id")
 
 
 @_reg("mif_roundtrip", f"""
@@ -5980,27 +5794,12 @@ def q_mif_roundtrip(spark, sf_dir):
     mitab_miffile.cpp): every 17th page writes to a .mif/.mid pair and
     reads back through the keyword-scan byte-range distributed parser;
     the oracle recomputes the same (doc_id, lon, lat) set."""
-    import os
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.mif import read_mif, write_mif
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 17 == 0) \
-        .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_mif_{os.getpid()}.mif")
-    rows = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                   [np.array([[r.lon, r.lat]])])),
-             {"doc_id": int(r.doc_id)}) for r in pts]
-    write_mif(rows, path)
-    out = read_mif(spark, path, features_per_task=16)
-
-    px, py = _pxy_udfs()
-
-    return out.select(F.col("doc_id"),
-                      F.round(px("geom"), 9).alias("lon_r"),
-                      F.round(py("geom"), 9).alias("lat_r"))
+    path = _tmp("mif.mif")
+    pts = _point_layer(spark, sf_dir, 17).orderBy("doc_id").collect()
+    write_mif([(bytes(r.geom), {"doc_id": r.doc_id}) for r in pts], path)
+    return _lonlat(read_mif(spark, path, features_per_task=16), "doc_id")
 
 
 @_reg("pmtiles_roundtrip", f"""
@@ -6036,10 +5835,6 @@ def q_pmtiles_roundtrip(spark, sf_dir):
     the directory-planned byte-range decoder. The oracle recomputes the
     Hilbert tile assignment implicitly (x, y survive the id round trip)
     and the dequantized mercator coordinates closed-form."""
-    import os
-    import shutil
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -6057,9 +5852,7 @@ def q_pmtiles_roundtrip(spark, sf_dir):
     pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 5 == 0)
     df = pts.select(F.col("doc_id").alias("fid"),
                     mk_geom("lon", "lat").alias("geom"))
-    out = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_pmt_{os.getpid()}_"
-                       f"{abs(hash(sf_dir)) % 10**8}")
+    out = _tmp(f"pmt_{abs(hash(sf_dir)) % 10**8}")
     shutil.rmtree(out, ignore_errors=True)
     _mvt.write_mvt(df, out, zoom=_MVT_Z, layer="pages",
                    extent=_MVT_EXTENT).collect()
@@ -6077,8 +5870,7 @@ def q_pmtiles_roundtrip(spark, sf_dir):
                        F.round(gy("geom"), 6).alias("my_r"))
 
 
-@_reg("bmp_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("bmp_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 256 AS DOUBLE) AS v
 FROM vals
@@ -6088,20 +5880,13 @@ def q_bmp_roundtrip(spark, sf_dir):
     writes as an 8-bit paletted bottom-up DIB through the per-strip
     pwrite sink and reads back through closed-form row-offset tasks; the
     oracle recomputes every cell (mod 256 — the 8-bit container)."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.bmp import read_bmp, write_bmp
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_bmp_{os.getpid()}.bmp")
-    write_bmp(t, path, width=64, height=64, tile=8)
-    back, _ = read_bmp(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("bmp.bmp")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_bmp(t, path, width=64, height=64, tile=8),
+        lambda: read_bmp(spark, path, tile=8)[0])
 
 
 @_reg("jsonfg_roundtrip", f"""
@@ -6119,23 +5904,10 @@ def q_jsonfg_roundtrip(spark, sf_dir):
     non-WGS84 place (coordRefSys) and a time interval, reads back
     through the distributed per-line parser; the oracle recomputes
     coordinates and both interval endpoints."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    import pandas as pd
-    from .core import wkb as _wkb
     from .sources.jsonfg import read_jsonfg, write_jsonfg
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
-
-    @F.pandas_udf("binary")
-    def mk(lon, lat):
-        return pd.Series(_wkb.encode_points_batch(
-            np.stack([lon.to_numpy(), lat.to_numpy()], axis=1)))
-
-    df = pts.select(
-        F.col("doc_id").alias("fid"), mk("lon", "lat").alias("geom"),
+    df = _point_layer(spark, sf_dir, 19).select(
+        F.col("doc_id").alias("fid"), "geom",
         F.date_format(F.date_add(F.lit("2024-01-01"),
                                  (F.col("doc_id") % 28).cast("int")),
                       "yyyy-MM-dd").alias("t0"),
@@ -6143,18 +5915,13 @@ def q_jsonfg_roundtrip(spark, sf_dir):
                                  (F.col("doc_id") % 28 + 3).cast("int")),
                       "yyyy-MM-dd").alias("t1"),
         F.to_json(F.struct(F.col("doc_id"))).alias("props"))
-    out = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_jsonfg_{os.getpid()}")
+    out = _tmp("jsonfg")
     shutil.rmtree(out, ignore_errors=True)
     write_jsonfg(df, out, crs="[EPSG:4326]", time_cols=("t0", "t1"))
     back = read_jsonfg(spark, out + "/part-*")
-
-    gx, gy = _pxy_udfs()
-
-    return back.select(
+    return _lonlat(
+        back,
         F.get_json_object("props", "$.doc_id").cast("long").alias("doc_id"),
-        F.round(gx("geom"), 9).alias("lon_r"),
-        F.round(gy("geom"), 9).alias("lat_r"),
         F.col("time_start").alias("t0"), F.col("time_end").alias("t1"))
 
 
@@ -6172,24 +5939,11 @@ def q_ogrmerge_tindex(spark, sf_dir):
     back through Open() with a source tag (per-source feature counts)
     and ogrtindex computes each dataset's extent by distributed envelope
     aggregation. The oracle recomputes both per split."""
-    import os
-    import shutil
-    import tempfile
-    import numpy as np
-    import pandas as pd
-    from .core import wkb as _wkb
     from .operators.ogrutils import ogrmerge, ogrtindex
     from .sources.geojson import write_geojson_seq
 
-    pts = datagen.points(spark, sf_dir)
-
-    @F.pandas_udf("binary")
-    def mk(lon, lat):
-        return pd.Series(_wkb.encode_points_batch(
-            np.stack([lon.to_numpy(), lat.to_numpy()], axis=1)))
-
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_omrg_{os.getpid()}")
+    pts = _point_layer(spark, sf_dir, 1)
+    base = _tmp("omrg")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)
     paths = []
@@ -6197,8 +5951,7 @@ def q_ogrmerge_tindex(spark, sf_dir):
         p = os.path.join(base, f"split{s}.geojsonl")
         write_geojson_seq(
             pts.where(F.col("doc_id") % 3 == s)
-               .select(F.col("doc_id").alias("fid"),
-                       mk("lon", "lat").alias("geom")),
+               .select(F.col("doc_id").alias("fid"), "geom"),
             p, props_col=None)
         paths.append(p)
 
@@ -6241,8 +5994,7 @@ def q_fix_mojibake(spark, sf_dir):
     return textops.fix_mojibake(corrupted)
 
 
-@_reg("dted_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("dted_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -6253,33 +6005,13 @@ def q_dted_roundtrip(spark, sf_dir):
     sample encoding, writes as column records (per-column parallel
     pwrite) and reads back through column-range byte tasks; the oracle
     recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.dted import read_dted, write_dted
-    import numpy as np
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_dted_{os.getpid()}.dt1")
-    write_dted(t8, path, ncols=64, nrows=64, tile=8)
-    back, _ = read_dted(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("dted.dt1")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_dted(t, path, ncols=64, nrows=64, tile=8),
+        lambda: read_dted(spark, path, tile=8)[0], shift=-8.0)
 
 
 @_reg("hash_sample", """
@@ -6358,37 +6090,22 @@ def q_gmt_georss_roundtrip(spark, sf_dir):
     single-file sinks and reads back through both wholetext-distributed
     parsers; the two readers' coordinates must agree with each other AND
     with the oracle (GeoRSS goes through the lat-first order swap)."""
-    import json
-    import os
-    import tempfile
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.georss import read_georss, write_georss
     from .sources.gmt import read_gmt, write_gmt
 
-    pts = datagen.points(spark, sf_dir).where(F.col("doc_id") % 23 == 0) \
-        .select("doc_id", "lon", "lat").orderBy("doc_id").collect()
-    gmt_p = os.path.join(tempfile.gettempdir(),
-                         f"gdal_spark_gmt_{os.getpid()}.gmt")
-    rss_p = os.path.join(tempfile.gettempdir(),
-                         f"gdal_spark_rss_{os.getpid()}.rss")
-    rows_g = [(_wkb.encode(_wkb.Geom(_wkb.POINT,
-                                     [np.array([[r.lon, r.lat]])])),
-               {"doc_id": int(r.doc_id)}) for r in pts]
-    rows_r = [(g, {"title": f"d{a['doc_id']}"}) for g, a in rows_g]
-    write_gmt(rows_g, gmt_p, gtype="POINT")
-    write_georss(rows_r, rss_p)
+    pts = _point_layer(spark, sf_dir, 23).orderBy("doc_id").collect()
+    gmt_p = _tmp("gmt.gmt")
+    rss_p = _tmp("rss.rss")
+    write_gmt([(bytes(r.geom), {"doc_id": r.doc_id}) for r in pts], gmt_p,
+              gtype="POINT")
+    write_georss([(bytes(r.geom), {"title": f"d{r.doc_id}"}) for r in pts],
+                 rss_p)
 
-    gx, gy = _pxy_udfs()
-
-    gmt_df = read_gmt(spark, gmt_p).select(
-        F.get_json_object("props", "$.doc_id").cast("long").alias("doc_id"),
-        F.round(gx("geom"), 9).alias("lon_r"),
-        F.round(gy("geom"), 9).alias("lat_r"))
-    rss_df = read_georss(spark, rss_p).select(
-        F.col("title"),
-        F.round(gx("geom"), 9).alias("lon_r2"),
-        F.round(gy("geom"), 9).alias("lat_r2"))
+    gmt_df = _lonlat(
+        read_gmt(spark, gmt_p),
+        F.get_json_object("props", "$.doc_id").cast("long").alias("doc_id"))
+    rss_df = _lonlat(read_georss(spark, rss_p), "title",
+                     names=("lon_r2", "lat_r2"))
     j = gmt_df.join(rss_df,
                     F.concat(F.lit("d"), F.col("doc_id").cast("string"))
                     == rss_df.title)
@@ -6419,8 +6136,6 @@ def q_osm_ways_assembly(spark, sf_dir):
     reference's on-disk node cache re-expressed relationally. The oracle
     recomputes each way's vertex count and planar length with window
     functions."""
-    import os
-    import tempfile
     import numpy as np
     import pandas as pd
     from .core import wkb as _wkb
@@ -6434,8 +6149,7 @@ def q_osm_ways_assembly(spark, sf_dir):
     for g in range(8):
         refs = [int(r.doc_id) + 1 for r in pts if r.doc_id % 8 == g]
         ways.append((g, refs, {"ref": str(g)}))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_osm_{os.getpid()}.osm")
+    path = _tmp("osm.osm")
     write_osm(nodes, ways, (), path)
     lines = osm_layers(spark, path)["lines"]
 
@@ -6474,15 +6188,11 @@ def q_snapshot_incremental(spark, sf_dir):
     metadata-atomic), and the incremental scan between A and B must
     return exactly the appended rows — flagged per doc against the full
     table. The oracle recomputes membership arithmetically."""
-    import os
-    import shutil
-    import tempfile
     from .plans.snapshot import SnapshotTable
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("n_chars"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_snap_{os.getpid()}")
+    path = _tmp("snap")
     shutil.rmtree(path, ignore_errors=True)
     t = SnapshotTable(spark, path)
     va = t.commit_append(d.where(F.col("doc_id") % 2 == 0))
@@ -6555,7 +6265,6 @@ def q_embed_covariance(spark, sf_dir):
     in numpy (O(d²) shuffle payload, row-count independent), the driver
     finishes cov = G/n − mean·meanᵀ. All 64×64 entries value-hash
     against DuckDB's covar_pop."""
-    import numpy as np
     from .operators.simsearch import embed_moments
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     _mean, cov, _n = embed_moments(emb)
@@ -6770,13 +6479,9 @@ def q_rpc_dem_points(spark, sf_dir):
     in the CRS like GCP control points; workers lru_cache the load).
     Bilinear interpolation of a plane is the plane, so the oracle
     replays the whole evaluation in closed form."""
-    import os
-    import tempfile
-
     from .raster.transforms import rpc_dem_crs
 
-    dem = os.path.join(tempfile.gettempdir(),
-                       f"gdal_spark_rpcdem_{os.getpid()}.asc")
+    dem = _tmp("rpcdem.asc")
     w, h = 73, 35
     lines = [f"ncols {w}", f"nrows {h}", "xllcorner -182.5",
              "yllcorner -87.5", "cellsize 5", "NODATA_value -9999"]
@@ -7044,8 +6749,7 @@ def q_link_triangles(spark, sf_dir):
     return graphops.triangles(_t(spark, sf_dir, "documents"))
 
 
-@_reg("gpkg_tiles_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("gpkg_tiles_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 256 AS DOUBLE) AS v
 FROM vals
@@ -7056,26 +6760,18 @@ def q_gpkg_tiles_roundtrip(spark, sf_dir):
     executors into a gpkg tile table and reads back through rowid-range
     parallel scan + in-task PNG decode; the oracle recomputes every
     cell mod 256 (the u1 PNG container)."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.gpkg import read_gpkg_tiles, write_gpkg_tiles
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gpkgt_{os.getpid()}.gpkg")
+    path = _tmp("gpkgt.gpkg")
     if os.path.exists(path):
         os.unlink(path)
-    write_gpkg_tiles(t, path, tile=8, zoom=3)
-    back, _ = read_gpkg_tiles(spark, path, tile=8, rows_per_task=16)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_gpkg_tiles(t, path, tile=8, zoom=3),
+        lambda: read_gpkg_tiles(spark, path, tile=8, rows_per_task=16)[0])
 
 
-@_reg("mbtiles_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("mbtiles_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 256 AS DOUBLE) AS v
 FROM vals
@@ -7084,22 +6780,15 @@ def q_mbtiles_roundtrip(spark, sf_dir):
     """MBTiles round trip (frmts/mbtiles/mbtilesdataset.cpp): density
     raster -> PNG tiles with the TMS row flip -> parallel read back with
     the un-flip; the oracle recomputes every cell mod 256."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.gpkg import read_mbtiles, write_mbtiles
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_mbt_{os.getpid()}.mbtiles")
+    path = _tmp("mbt.mbtiles")
     if os.path.exists(path):
         os.unlink(path)
-    write_mbtiles(t, path, tile=8, zoom=3)
-    back, _ = read_mbtiles(spark, path, tile=8, rows_per_task=16)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_mbtiles(t, path, tile=8, zoom=3),
+        lambda: read_mbtiles(spark, path, tile=8, rows_per_task=16)[0])
 
 
 @_reg("robots_optout", f"""
@@ -7199,8 +6888,7 @@ def q_stratified_sample(spark, sf_dir):
     return out.select("doc_id", "source")
 
 
-@_reg("pnm_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("pnm_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -7209,24 +6897,17 @@ def q_pnm_roundtrip(spark, sf_dir):
     path: maxval 65535 stores BIG-endian u2 samples per the Netpbm
     rule; density counts fit u16 exactly, so the oracle recomputes
     every cell with no container truncation."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.pnm import read_pnm, write_pnm
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pnm_{os.getpid()}.pgm")
-    write_pnm(t, path, width=64, height=64, maxval=65535, tile=8)
-    back, _ = read_pnm(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("pnm.pgm")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_pnm(t, path, width=64, height=64, maxval=65535,
+                            tile=8),
+        lambda: read_pnm(spark, path, tile=8)[0])
 
 
-@_reg("netcdf_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("netcdf_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -7238,26 +6919,17 @@ def q_netcdf_roundtrip(spark, sf_dir):
     byte-range distributed parser; the oracle recomputes every cell.
     Dimension names and attributes are pinned by tests/test_netcdf.py
     against the autotest bug636.nc checksum (31621)."""
-    import os
-    import tempfile
-
-    from .raster.tiles import gdal2xyz
     from .sources.netcdf import read_netcdf, write_netcdf
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_nc_{os.getpid()}.nc")
-    write_netcdf(t, path, width=64, height=64, var="density", tile=8,
-                 atts={"units": "pages"})
-    back, _meta = read_netcdf(spark, path, var="density", tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("nc.nc")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_netcdf(t, path, width=64, height=64, var="density",
+                               tile=8, atts={"units": "pages"}),
+        lambda: read_netcdf(spark, path, var="density", tile=8)[0])
 
 
-@_reg("dem_formats_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("dem_formats_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        v AS v_hgt, v AS v_bt, v AS v_ers, v AS v_rst, v AS v_saga
 FROM vals
@@ -7272,15 +6944,10 @@ def q_dem_formats_roundtrip(spark, sf_dir):
     each byte-range reader; counts are small integers so every
     container holds them exactly and the oracle recomputes the same
     value five times."""
-    import os
-    import tempfile
-
-    from .raster.tiles import gdal2xyz
     from .sources import demraw
 
     t = _density_tiles_full(spark, sf_dir)
-    base = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_demraw_{os.getpid()}")
+    base = _tmp("demraw")
     os.makedirs(base, exist_ok=True)
     hgt = os.path.join(base, "N00E000.hgt")
     demraw.write_srtmhgt(t, hgt, n=64, tile=8)
@@ -7293,18 +6960,13 @@ def q_dem_formats_roundtrip(spark, sf_dir):
     sgrd = os.path.join(base, "d.sgrd")
     demraw.write_saga(t, sgrd, samples=64, lines=64, dtype="f4", tile=8)
 
-    def vals(df, name):
-        rows = gdal2xyz(df, tile=8)
-        return rows.select(F.col("x").cast("long").alias("x"),
-                           F.col("y").cast("long").alias("y"),
-                           F.col("value").cast("double").alias(name))
-    out = vals(demraw.read_srtmhgt(spark, hgt, tile=8)[0], "v_hgt")
+    out = _xyz(demraw.read_srtmhgt(spark, hgt, tile=8)[0], "v_hgt")
     for df, name in [(demraw.read_bt(spark, bt, tile=8)[0], "v_bt"),
                      (demraw.read_ers(spark, ers, tile=8)[0], "v_ers"),
                      (demraw.read_idrisi(spark, rst, tile=8)[0], "v_rst"),
                      (demraw.read_saga(spark, sgrd, tile=8)[0],
                       "v_saga")]:
-        out = out.join(vals(df, name), ["x", "y"])
+        out = out.join(_xyz(df, name), ["x", "y"])
     return out
 
 
@@ -7331,9 +6993,6 @@ def q_jpeg_roundtrip(spark, sf_dir):
     and the DuckDB oracle can recompute them relationally. The decode
     side is the same code path pinned bit-exact to libjpeg by the
     albania.jpg / JPEG-in-TIFF checksum tests."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -7372,8 +7031,7 @@ def q_jpeg_roundtrip(spark, sf_dir):
     tiles = tiles.unionByName(
         missing.groupBy("bx", "by").applyInPandas(build_empty,
                                                   TILE_SCHEMA))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_jpg_{os.getpid()}.jpg")
+    path = _tmp("jpg.jpg")
     save_raster(tiles, path, tile=8, quality=100)
     back, _meta = read_jpeg(spark, path, tile=8)
 
@@ -7768,10 +7426,6 @@ def q_osm_pbf_ways(spark, sf_dir):
     vectorized reduceat lane and reassembles ways via the distributed
     node join. Coordinates quantize to the 1e-7-degree granularity —
     the oracle applies the identical floor(x*1e7+0.5) quantization."""
-    import json as _json
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -7787,8 +7441,7 @@ def q_osm_pbf_ways(spark, sf_dir):
         refs = [int(r.doc_id) + 1 for r in pts
                 if (r.doc_id // 3) % 6 == g]
         ways.append((g, refs, {"ref": str(g)}))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pbf_{os.getpid()}.osm.pbf")
+    path = _tmp("pbf.osm.pbf")
     write_osm_pbf(nodes, ways, (), path, nodes_per_block=100)
     lines = osm_pbf_layers(spark, path)["lines"]
 
@@ -7997,15 +7650,11 @@ def q_gridshift_ntv2(spark, sf_dir):
     oracle replay the bilinear interpolation node-for-node in SQL. At
     cluster scale the .gsb ships with --files; here executors share the
     local path."""
-    import os
-    import tempfile
-
     import numpy as np
 
     from .raster import ntv2 as _ntv2
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_shift_{os.getpid()}.gsb")
+    path = _tmp("shift.gsb")
     if not os.path.exists(path):
         i, j = np.mgrid[0:41, 0:41]
         _ntv2.write_ntv2(path, lat0=40.0, lat1=60.0, lon0=-10.0,
@@ -8049,17 +7698,13 @@ def q_grib_ingest(spark, sf_dir):
     fixture encoder, decoded executor-side through the vectorized
     unpackbits lane, re-aggregated per band. The oracle recomputes the
     integer field sums from the closed-form formula."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from .raster.tiles import decode_px
     from .sources.grib import read_grib, write_grib
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_grib_{os.getpid()}.grib")
+    path = _tmp("grib.grib")
     if not os.path.exists(path):
         y, x = np.mgrid[0:37, 0:41]
         arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
@@ -8534,15 +8179,11 @@ def q_s57_roundtrip(spark, sf_dir):
     reads back through the byte-range distributed record parser; the
     oracle recomputes the same 1e-7-quantized coordinates from the
     source table."""
-    import os
-    import tempfile
-
     from .sources.s57 import RCNM_VI, read_s57, write_s57
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 13 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_s57_{os.getpid()}.000")
+    path = _tmp("s57.000")
     q = 10000000.0
 
     def qz(v):
@@ -8555,10 +8196,7 @@ def q_s57_roundtrip(spark, sf_dir):
               [(RCNM_VI, int(r.doc_id) + 1, 255, 255)]) for r in rows]
     write_s57(path, nodes, [], feats)
     df = read_s57(spark, path)
-    px, py = _pxy_udfs()
-    return df.select((F.col("fidn")).alias("doc_id"),
-                     F.round(px("geom"), 9).alias("x_r"),
-                     F.round(py("geom"), 9).alias("y_r"))
+    return _lonlat(df, F.col("fidn").alias("doc_id"), names=("x_r", "y_r"))
 
 
 @_reg("dgn_roundtrip", f"""
@@ -8576,15 +8214,12 @@ def q_dgn_roundtrip(spark, sf_dir):
     distributed element parser; the oracle recomputes the quantized
     coordinates, and the text payload carries the doc_id for the join."""
     import math
-    import os
-    import tempfile
 
     from .sources.dgn import read_dgn, write_dgn
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 17 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_dgn_{os.getpid()}.dgn")
+    path = _tmp("dgn.dgn")
     q = 1000000.0
 
     def qz(v):
@@ -8594,10 +8229,8 @@ def q_dgn_roundtrip(spark, sf_dir):
                      for r in rows],
               uor_per_sub=1000, sub_per_master=1000)
     df = read_dgn(spark, path)
-    px, py = _pxy_udfs()
-    return df.select(F.col("text").cast("long").alias("doc_id"),
-                     F.round(px("geom"), 9).alias("x_r"),
-                     F.round(py("geom"), 9).alias("y_r"))
+    return _lonlat(df, F.col("text").cast("long").alias("doc_id"),
+                   names=("x_r", "y_r"))
 
 
 @_reg("ccnet_buckets", """
@@ -8776,16 +8409,11 @@ def q_snapshot_merge_delete(spark, sf_dir):
     oracle recomputes the surviving set relationally (FULL OUTER JOIN +
     filter); correctness covers update, insert, delete, and the carry of
     untouched files in one pass."""
-    import os
-    import shutil
-    import tempfile
-
     from .plans.snapshot import SnapshotTable
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("n_chars"))
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_snapmd_{os.getpid()}")
+    path = _tmp("snapmd")
     shutil.rmtree(path, ignore_errors=True)
     t = SnapshotTable(spark, path)
     t.commit_append(d.where(F.col("doc_id") % 3 != 0).repartition(8))
@@ -8809,26 +8437,19 @@ def q_topojson_roundtrip(spark, sf_dir):
     running sum): every 19th page writes as a quantized Point into a
     Topology and reads back through the broadcast-arc executor decode;
     the oracle recomputes the 1e-7 grid snap."""
-    import os
-    import tempfile
-
     from .core import wkb as _wkb
     from .sources.topojson import read_topojson, write_topojson
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_tj_{os.getpid()}.topojson")
+    path = _tmp("tj.topojson")
     import numpy as np
     feats = [(int(r.doc_id), {},
               _wkb.Geom(_wkb.POINT, [np.array([[r.lon, r.lat]])]))
              for r in rows]
     write_topojson(path, {"pages": feats}, quantum=1e-7)
     df = read_topojson(spark, path)
-    px, py = _pxy_udfs()
-    return df.select(F.col("fid").alias("doc_id"),
-                     F.round(px("geom"), 9).alias("x_r"),
-                     F.round(py("geom"), 9).alias("y_r"))
+    return _lonlat(df, F.col("fid").alias("doc_id"), names=("x_r", "y_r"))
 
 
 @_reg("bm25_topk", """
@@ -8944,14 +8565,10 @@ def q_cog_overviews(spark, sf_dir):
     smallest-overview-first), then the level-1 overview reads back
     through the next-IFD chain and every pixel must equal the
     SQL-recomputed 2x2 average of the full-res grid."""
-    import os
-    import tempfile
-
     from .sources.geotiff import read_gtiff, write_cog
 
     t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_cog_{os.getpid()}.tif")
+    path = _tmp("cog.tif")
     write_cog(t, path, 64, 64, tile=8, dtype="float64",
               geotransform=(-180.0, 5.625, 0.0, 90.0, 0.0, -2.8125))
     return _px_rows(read_gtiff(spark, path, tile=8, ifd=1), tile=8)
@@ -9005,14 +8622,10 @@ def q_warc_roundtrip(spark, sf_dir):
     write as WARC response records via the two-pass prefix-sum executor
     sink, the driver re-indexes headers only, and executors read the
     payload ranges back; url, date and payload bytes must survive."""
-    import os
-    import tempfile
-
     from .sources.warc import read_warc, write_warc
 
     pg = datagen.pages(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_warc_{os.getpid()}.warc")
+    path = _tmp("warc.warc")
     write_warc(pg, path)
     w = read_warc(spark, path)
     return w.select("url", "warc_date",
@@ -9063,14 +8676,10 @@ def q_warc_gz_roundtrip(spark, sf_dir):
     columnar CDX index: pages compress-and-pwrite from executors (with
     the zlib-skew layout guard), then read back by byte range through
     the returned index DataFrame; url/date/payload must survive."""
-    import os
-    import tempfile
-
     from .sources.warc import read_warc_gz, write_warc_gz
 
     pg = datagen.pages(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_warcgz_{os.getpid()}.warc.gz")
+    path = _tmp("warcgz.warc.gz")
     idx = write_warc_gz(pg, path)
     w = read_warc_gz(spark, path, idx)
     return w.select("url", "warc_date",
@@ -9375,19 +8984,14 @@ def q_spreadsheet_roundtrip(spark, sf_dir):
     cells; content.xml value-types) and read back through both
     binaryFile-distributed parsers; values from BOTH formats must match
     the parquet-derived oracle — typed cells survive the trip exactly."""
-    import os
-    import tempfile
-
     from .sources.xlsx import read_ods, read_xlsx, write_ods, write_xlsx
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 37 == 0) \
         .select("doc_id", "lang", "n_chars").orderBy("doc_id")
     rows = [{"doc_id": int(r.doc_id), "lang": r.lang,
              "n_chars": int(r.n_chars)} for r in d.collect()]
-    xp = os.path.join(tempfile.gettempdir(),
-                      f"gdal_spark_ss_{os.getpid()}.xlsx")
-    op = os.path.join(tempfile.gettempdir(),
-                      f"gdal_spark_ss_{os.getpid()}.ods")
+    xp = _tmp("ss.xlsx")
+    op = _tmp("ss.ods")
     write_xlsx(rows, xp)
     write_ods(rows, op)
     gx = read_xlsx(spark, xp).select(
@@ -9403,8 +9007,7 @@ def q_spreadsheet_roundtrip(spark, sf_dir):
     return gx.join(go, "doc_id")
 
 
-@_reg("gif_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("gif_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v
 FROM vals
@@ -9417,24 +9020,16 @@ def q_gif_roundtrip(spark, sf_dir):
     offsets) and re-reads through the giflib-semantics variable-width
     decoder (pinned to the reference autotest checksums 57921/4672 in
     tests); the oracle recomputes every cell with the Byte clamp."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.gif import read_gif, write_gif
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_gif_{os.getpid()}.gif")
-    write_gif(t, path, width=64, height=64, tile=8)
-    back, _ = read_gif(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    path = _tmp("gif.gif")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_gif(t, path, width=64, height=64, tile=8),
+        lambda: read_gif(spark, path, tile=8)[0])
 
 
-@_reg("tileservice_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("tileservice_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v_tms,
        CAST(least(v, 255) AS DOUBLE) AS v_wmts
@@ -9451,16 +9046,11 @@ def q_tileservice_roundtrip(spark, sf_dir):
     driver enumeration); fetch+decode fan out through the core.vsi
     seam.  Both reads must agree with the clamped oracle cell-for-cell
     (PNG is lossless; the Byte clamp matches the GIF sink's)."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
-    from .sources.tileservice import read_tileservice, read_wmts
+    from .sources.tileservice import (read_tileservice, read_wmts,
+                                      write_xyz_pyramid)
 
-    t = _density_tiles_full(spark, sf_dir)
-    d = os.path.join(tempfile.gettempdir(),
-                     f"gdal_spark_tiles_{os.getpid()}")
-    from .sources.tileservice import write_xyz_pyramid
-    write_xyz_pyramid(t, d, tile=8)
+    d = _tmp("tiles")
+    write_xyz_pyramid(_density_tiles_full(spark, sf_dir), d, tile=8)
     tms_xml = f"""<GDAL_WMS>
   <Service name="TMS">
     <ServerUrl>file://{d}/${{z}}/${{x}}/${{y}}.png</ServerUrl>
@@ -9502,15 +9092,7 @@ def q_tileservice_roundtrip(spark, sf_dir):
 </Capabilities>"""
     tms_df, _ = read_tileservice(spark, tms_xml, level=0)
     wmts_df, _ = read_wmts(spark, caps_xml, bands=1)
-    a = gdal2xyz(tms_df, tile=8).select(
-        F.col("x").cast("long").alias("x"),
-        F.col("y").cast("long").alias("y"),
-        F.col("value").alias("v_tms"))
-    b = gdal2xyz(wmts_df, tile=8).select(
-        F.col("x").cast("long").alias("x"),
-        F.col("y").cast("long").alias("y"),
-        F.col("value").alias("v_wmts"))
-    return a.join(b, ["x", "y"])
+    return _xyz(tms_df, "v_tms").join(_xyz(wmts_df, "v_wmts"), ["x", "y"])
 
 
 @_reg("pgdump_sink", f"""
@@ -9527,28 +9109,13 @@ def q_pgdump_sink(spark, sf_dir):
     file as text, strips the SRID flag/bytes back off the EWKB in pure
     column ops, and decodes coordinates through the vectorized WKB lane
     — values must match the parquet-derived oracle."""
-    import os
-    import tempfile
-
-    import numpy as np
-    from .core import wkb as _wkb
     from .sources.pgdump import write_pgdump
 
-    p = datagen.points(spark, sf_dir).where(F.col("doc_id") % 41 == 0)
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    lay = p.join(d, "doc_id")
-
-    @F.pandas_udf("binary")
-    def enc(lon, lat):
-        import pandas as pd
-        pts = np.stack([lon.to_numpy(), lat.to_numpy()], axis=1)
-        return pd.Series(_wkb.encode_points_batch(pts))
-
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pgdump_{os.getpid()}.sql")
-    write_pgdump(
-        lay.select(enc("lon", "lat").alias("geom"), "doc_id", "lang"),
-        path, table="pages", srid=4326, geom_type="POINT")
+    lay = _point_layer(spark, sf_dir, 41).join(d, "doc_id")
+    path = _tmp("pgdump.sql")
+    write_pgdump(lay.select("geom", "doc_id", "lang"),
+                 path, table="pages", srid=4326, geom_type="POINT")
 
     txt = spark.read.text(path)
     rows = txt.where(F.col("value").contains("\t")) \
@@ -9558,12 +9125,10 @@ def q_pgdump_sink(spark, sf_dir):
     plain = F.unhex(F.concat(F.substring(F.col("c")[0], 1, 8),
                              F.lit("00"),
                              F.expr("substring(c[0], 19)")))
-    gx, gy = _pxy_udfs()
-    return rows.select(
-        F.col("c")[1].cast("long").alias("doc_id"),
-        F.round(gx(plain), 9).alias("lon_r"),
-        F.round(gy(plain), 9).alias("lat_r"),
-        F.col("c")[2].alias("lang"))
+    return _lonlat(rows.select(F.col("c")[1].cast("long").alias("doc_id"),
+                               plain.alias("geom"),
+                               F.col("c")[2].alias("lang")),
+                   "doc_id", "lang")
 
 
 def _labelprop_sql(rounds: int = 4) -> str:
@@ -9724,8 +9289,7 @@ def q_pmi_pairs(spark, sf_dir):
     return textops.pmi_cooccurrence(_t(spark, sf_dir, "documents"))
 
 
-@_reg("pds_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("pds_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(v AS DOUBLE) AS v
 FROM vals
@@ -9737,24 +9301,17 @@ def q_pds_roundtrip(spark, sf_dir):
     (pointer resolution + SAMPLE_TYPE dtype mapping, reader pinned to
     the reference autotest LDEM_4 checksum in tests); the oracle
     recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.pds import read_pds, write_pds
 
-    t = _density_tiles_full(spark, sf_dir)
-    stem = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pds_{os.getpid()}")
-    write_pds(t, stem + ".LBL", samples=64, lines=64, dtype="i2", tile=8)
-    back, meta = read_pds(spark, stem + ".LBL", tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    path = _tmp("pds.LBL")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_pds(t, path, samples=64, lines=64, dtype="i2",
+                            tile=8),
+        lambda: read_pds(spark, path, tile=8)[0])
 
 
-@_reg("vicar_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("vicar_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(v AS DOUBLE) AS v
 FROM vals
@@ -9766,24 +9323,17 @@ def q_vicar_roundtrip(spark, sf_dir):
     label-driven reader (pinned to the full reference autotest checksum
     table incl. VAX floats + BIP sample-records in tests); oracle
     recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.vicar import read_vicar, write_vicar
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_vic_{os.getpid()}.vic")
-    write_vicar(t, path, samples=64, lines=64, dtype="i2", tile=8)
-    back, _ = read_vicar(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    path = _tmp("vic.vic")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_vicar(t, path, samples=64, lines=64, dtype="i2",
+                              tile=8),
+        lambda: read_vicar(spark, path, tile=8)[0])
 
 
-@_reg("isis3_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("isis3_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(v AS DOUBLE) AS v
 FROM vals
@@ -9795,24 +9345,17 @@ def q_isis3_roundtrip(spark, sf_dir):
     closed-form offset (zero re-striping) — and re-reads through the
     PVL reader (pinned to autotest checksums 42403/9978 in tests);
     oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import gdal2xyz
     from .sources.isis3 import read_isis3, write_isis3
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_isis_{os.getpid()}.cub")
-    write_isis3(t, path, samples=64, lines=64, dtype="i2", tile=8)
-    back, _ = read_isis3(spark, path)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+    path = _tmp("isis.cub")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_isis3(t, path, samples=64, lines=64, dtype="i2",
+                              tile=8),
+        lambda: read_isis3(spark, path)[0])
 
 
-@_reg("nitf_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("nitf_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(least(v, 255) AS DOUBLE) AS v
 FROM vals
@@ -9824,33 +9367,23 @@ def q_nitf_roundtrip(spark, sf_dir):
     re-reads through the fixed-width header walk (reader pinned to the
     autotest rgb.ntf checksum 21349 in tests); Byte clamp like
     GDALCopyWords; oracle recomputes every cell."""
-    import os
-    import tempfile
     import numpy as np
-    import pandas as pd
-    from .raster.tiles import TILE_SCHEMA, decode_px, encode_px, gdal2xyz
+    from .raster.tiles import decode_px, encode_px
     from .sources.nitf import read_nitf, write_nitf
 
-    t0 = _density_tiles_full(spark, sf_dir)
-    # clamp f8 -> u1 before the sink (GDALCopyWords semantics)
     def clamp(batches):
+        # f8 -> u1 before the sink (GDALCopyWords semantics)
         for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = np.clip(decode_px(r.px, r.dtype, 8), 0, 255)
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y, "u1",
-                            r.nodata, encode_px(arr.astype("u1"))))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             TILE_SCHEMA.fields])
-    t = t0.mapInPandas(clamp, TILE_SCHEMA)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_nitf_{os.getpid()}.ntf")
-    write_nitf(t, path, width=64, height=64, tile=8, dtype="u1")
-    back, _ = read_nitf(spark, path)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").alias("v"))
+            yield pdf.assign(dtype="u1", px=[
+                encode_px(np.clip(decode_px(p, d, 8), 0, 255).astype("u1"))
+                for p, d in zip(pdf["px"], pdf["dtype"])])
+
+    path = _tmp("nitf.ntf")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_nitf(t.mapInPandas(clamp, t.schema), path,
+                             width=64, height=64, tile=8, dtype="u1"),
+        lambda: read_nitf(spark, path)[0])
 
 
 @_reg("corpus_report", """
@@ -10261,8 +9794,7 @@ def q_st_transform_worldmap2(spark, sf_dir):
         FROM t_wm2_pts""")
 
 
-@_reg("usgsdem_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("usgsdem_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -10276,34 +9808,15 @@ def q_usgsdem_roundtrip(spark, sf_dir):
     semantics; the oracle recomputes every cell. The same reader passes
     the reference autotest golden checksums (tests/test_usgsdem.py:
     1583 / 53864 / 61424)."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.usgsdem import read_usgsdem, write_usgsdem
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_usgsdem_{os.getpid()}.dem")
-    write_usgsdem(t8, path, width_px=64, height_px=64, tile=8,
-                  x0=-180.0, y_top=90.0, dx=5.625, dy=2.8125,
-                  geographic=True)
-    back = read_usgsdem(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("usgsdem.dem")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_usgsdem(t, path, width_px=64, height_px=64, tile=8,
+                                x0=-180.0, y_top=90.0, dx=5.625, dy=2.8125,
+                                geographic=True),
+        lambda: read_usgsdem(spark, path, tile=8), shift=-8.0)
 
 
 @_reg("grib2_ingest", """
@@ -10329,16 +9842,12 @@ def q_grib2_ingest(spark, sf_dir):
     spatial differencing, tests/test_grib2.py), masked cells read as
     the reference's 9999 nodata and are excluded from the aggregate.
     The oracle recomputes the masked integer sums closed-form."""
-    import os
-    import tempfile
-
     import numpy as np
 
     from .raster.tiles import decode_px
     from .sources.grib2 import read_grib2, write_grib2
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_grib2_{os.getpid()}.grb2")
+    path = _tmp("grib2.grb2")
     if not os.path.exists(path):
         y, x = np.mgrid[0:37, 0:41]
         arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
@@ -10370,8 +9879,7 @@ def q_grib2_ingest(spark, sf_dir):
                     "ni", "nj", "n_valid", "sum_cs"))
 
 
-@_reg("hfa_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("hfa_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -10385,34 +9893,15 @@ def q_hfa_roundtrip(spark, sf_dir):
     (incl. ESRI GRID RLE and spill .ige files) matches the reference
     autotest golden checksums 6691 / 23529 / 1631
     (tests/test_hfa.py). The oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.hfa import read_hfa, write_hfa
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_hfa_{os.getpid()}.img")
-    write_hfa(t8, path, width_px=64, height_px=64, tile=8,
-              pixel_type=8,
-              gt=(-180.0, 5.625, 0.0, 90.0, 0.0, -2.8125))
-    back, _ = read_hfa(spark, path)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("hfa.img")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_hfa(t, path, width_px=64, height_px=64, tile=8,
+                            pixel_type=8,
+                            gt=(-180.0, 5.625, 0.0, 90.0, 0.0, -2.8125)),
+        lambda: read_hfa(spark, path)[0], shift=-8.0)
 
 
 def _nzmg_sql():
@@ -10711,8 +10200,7 @@ def q_rrf_fusion(spark, sf_dir):
     return simsearch.rrf_fusion([bm, co], k=60, topk=15)
 
 
-@_reg("lan_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("lan_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -10724,36 +10212,16 @@ def q_lan_roundtrip(spark, sf_dir):
     reads back through line-strip byte tasks; the same reader passes
     both reference autotest fixtures at their golden checksum
     (tests/test_lan.py). The oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.lan import read_lan, write_lan
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_lan_{os.getpid()}.lan")
-    write_lan(t8, path, width_px=64, height_px=64, tile=8, pix=2)
-    back, _ = read_lan(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("lan.lan")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_lan(t, path, width_px=64, height_px=64, tile=8, pix=2),
+        lambda: read_lan(spark, path, tile=8)[0], shift=-8.0)
 
 
-@_reg("pcraster_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("pcraster_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, v
 FROM vals
 """)
@@ -10765,22 +10233,14 @@ def q_pcraster_roundtrip(spark, sf_dir):
     same reader passes the reference autotest ldd.map golden checksum
     4528 + geotransform + nodata pins (tests/test_pcraster.py). Counts
     are exact in REAL4, so the oracle recomputes every cell verbatim."""
-    import os
-    import tempfile
-
-    from .raster.tiles import gdal2xyz
     from .sources.pcraster import read_pcraster, write_pcraster
 
-    t = _density_tiles_full(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_pcr_{os.getpid()}.map")
-    write_pcraster(t, path, width_px=64, height_px=64, tile=8,
-                   cell_repr="f4")
-    back, _ = read_pcraster(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("pcr.map")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_pcraster(t, path, width_px=64, height_px=64, tile=8,
+                                 cell_repr="f4"),
+        lambda: read_pcraster(spark, path, tile=8)[0])
 
 
 def _zonal_oracle_sql():
@@ -10807,8 +10267,7 @@ def _zonal_oracle_sql():
     return " UNION ALL ".join(parts)
 
 
-@_reg("zonal_stats", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + f""",
+@_reg("zonal_stats", _DENSITY_XY_SQL + f""",
 centers AS (SELECT v,
                    -180.0 + (x + 0.5) * 5.625 AS cx,
                    -90.0 + (y + 0.5) * 2.8125 AS cy
@@ -10876,8 +10335,7 @@ def q_st_hausdorff(spark, sf_dir):
         FROM t_hd_pts""")
 
 
-@_reg("bsb_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("bsb_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) % 120 AS DOUBLE) AS v
 FROM vals
@@ -10892,32 +10350,21 @@ def q_bsb_roundtrip(spark, sf_dir):
     repair) — the same reader passes the autotest golden checksum
     30321 on all three rgbsmall variants (tests/test_bsb.py). The
     oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
+    from .raster.tiles import decode_px
     from .sources.bsb import read_bsb, write_bsb
-    import pandas as pd
-
-    t = _density_tiles_full(spark, sf_dir)
 
     def mod(batches):
         for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) % 120.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
+            yield pdf.assign(dtype="f8", px=[
+                (decode_px(p, d, 8) % 120.0).tobytes()
+                for p, d in zip(pdf["px"], pdf["dtype"])])
 
-    t8 = t.mapInPandas(mod, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_bsb_{os.getpid()}.kap")
-    write_bsb(t8, path, width_px=64, height_px=64, tile=8, depth=7)
-    back, _ = read_bsb(spark, path, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("bsb.kap")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_bsb(t.mapInPandas(mod, t.schema), path,
+                            width_px=64, height_px=64, tile=8, depth=7),
+        lambda: read_bsb(spark, path, tile=8)[0])
 
 
 def _platt_oracle_sql(iters: int = 6) -> str:
@@ -11030,8 +10477,7 @@ def q_readability(spark, sf_dir):
     return textops.readability(d)
 
 
-@_reg("hdf5_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("hdf5_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -11047,51 +10493,16 @@ def q_hdf5_roundtrip(spark, sf_dir):
     reference autotest golden checksums (tests/test_hdf5.py: 135, 18,
     231, 523, 511 — and byte.tif's 4672 through a flipped netCDF-4
     Band1). The oracle recomputes every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.hdf5 import read_hdf5, write_hdf5
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_h5_{os.getpid()}.h5")
-    write_hdf5(t8, path, width_px=64, height_px=64, tile=8)
-    back, _ = read_hdf5(spark, path, "/Band1", tile=256)
-
-    def retile(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 256)[:64, :64]
-                for ty in range(8):
-                    for tx in range(8):
-                        blk = arr[ty * 8:(ty + 1) * 8,
-                                  tx * 8:(tx + 1) * 8]
-                        out.append((1, 0, tx, ty, "f8", None,
-                                    blk.astype("f8").tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    small = back.mapInPandas(retile, back.schema)
-    rows = gdal2xyz(small, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    path = _tmp("h5.h5")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_hdf5(t, path, width_px=64, height_px=64, tile=8),
+        lambda: read_hdf5(spark, path, "/Band1", tile=8)[0], shift=-8.0)
 
 
-@_reg("sdts_roundtrip", _DENSITY_VALS_SQL.replace(
-    "vals AS (SELECT", "vals AS (SELECT g.x, g.y,") + """
+@_reg("sdts_roundtrip", _DENSITY_XY_SQL + """
 SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
        CAST(CAST(v AS BIGINT) - 8 AS DOUBLE) AS v
 FROM vals
@@ -11106,32 +10517,14 @@ def q_sdts_roundtrip(spark, sf_dir):
     golden checksum 61672 + exact geotransform + TITLE on the
     truncated ALANSON quad (tests/test_sdts.py). The oracle recomputes
     every cell."""
-    import os
-    import tempfile
-    from .raster.tiles import decode_px, gdal2xyz
     from .sources.sdts import read_sdts, write_sdts
-    import pandas as pd
 
-    t = _density_tiles_full(spark, sf_dir)
-
-    def shift(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                arr = decode_px(r.px, r.dtype, 8) - 8.0
-                out.append((r.band, r.zoom, r.tile_x, r.tile_y,
-                            "f8", r.nodata, arr.tobytes()))
-            yield pd.DataFrame(out, columns=list(pdf.columns))
-
-    t8 = t.mapInPandas(shift, t.schema)
-    d = os.path.join(tempfile.gettempdir(),
-                     f"gdal_spark_sdts_{os.getpid()}")
-    catd = write_sdts(t8, d, width_px=64, height_px=64, tile=8)
-    back, _ = read_sdts(spark, catd, tile=8)
-    rows = gdal2xyz(back, tile=8)
-    return rows.select(F.col("x").cast("long").alias("x"),
-                       F.col("y").cast("long").alias("y"),
-                       F.col("value").cast("double").alias("v"))
+    d = _tmp("sdts")
+    return _density_roundtrip(
+        spark, sf_dir,
+        lambda t: write_sdts(t, d, width_px=64, height_px=64, tile=8),
+        lambda: read_sdts(spark, os.path.join(d, "9999CATD.DDF"),
+                          tile=8)[0], shift=-8.0)
 
 
 def _ari_sql():
@@ -11220,9 +10613,6 @@ def q_openfilegdb_roundtrip(spark, sf_dir):
     cannot move an 8-decimal rounding; the oracle replays the same
     1e-7 quantization from the source table."""
     import math
-    import os
-    import shutil
-    import tempfile
 
     import numpy as np
 
@@ -11232,8 +10622,7 @@ def q_openfilegdb_roundtrip(spark, sf_dir):
 
     rows = (datagen.points(spark, sf_dir).where(F.col("doc_id") % 19 == 0)
             .select("doc_id", "lon", "lat").orderBy("doc_id").collect())
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_ofgdb_{os.getpid()}.gdb")
+    path = _tmp("ofgdb.gdb")
     shutil.rmtree(path, ignore_errors=True)
     q = 10000000.0
 
@@ -11276,17 +10665,13 @@ def q_grib2_jpeg2000(spark, sf_dir):
     sums closed-form.  Closes the reference's frmts/openjpeg
     dependency for GRIB2 (grib2.py template-40, was 'unsupported' in
     rounds 1-4)."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from .raster.tiles import decode_px
     from .sources.grib2 import read_grib2, write_grib2
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_grib2j2k_{os.getpid()}.grb2")
+    path = _tmp("grib2j2k.grb2")
     if not os.path.exists(path):
         y, x = np.mgrid[0:37, 0:41]
         arrays = [(((b * 17 + x * 3 + y * 7) % 400) + 20000) / 100.0
@@ -11645,17 +11030,13 @@ def q_multidim_slice(spark, sf_dir):
     cell against the closed-form oracle.  Chunked layouts pinned
     separately against the HDFEOS autotest fixture in
     tests/test_hdf5.py."""
-    import os
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from .raster.tiles import decode_px
     from .sources.hdf5 import read_hdf5_multidim, write_hdf5_nd
 
-    path = os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_md4_{os.getpid()}.h5")
+    path = _tmp("md4.h5")
     if not os.path.exists(path):
         t, z, h, w = 3, 2, 37, 41
         tt, zz, yy, xx = np.meshgrid(

@@ -88,7 +88,7 @@ def contour_segments(tiles_df: DataFrame, levels: list[float],
     """-> segment DataFrame (band, zoom, level, x0, y0, x1, y1)."""
     halo = tiles_df.mapInPandas(lambda it: _emit_halo(it, tile), _HALO_SCHEMA)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pad = _assemble_padded(pdf, tile)
         if pad is None:
             return pd.DataFrame(columns=[f.name for f in _SEG_SCHEMA.fields])
@@ -296,7 +296,7 @@ def region_segments(tiles_df: DataFrame, levels: list[float],
     halo = tiles_df.mapInPandas(lambda it: _emit_halo(it, tile),
                                 _HALO_SCHEMA)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pad = _assemble_padded(pdf, tile)
         cols = [f.name for f in _SEG_SCHEMA.fields]
         if pad is None:
@@ -524,7 +524,7 @@ def region_fragments(tiles_df: DataFrame, levels: list[float],
 
     cols = [f.name for f in _FRAG_SCHEMA.fields]
 
-    def link(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def link(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band, zoom, level = int(key[0]), int(key[1]), float(key[2])
         segs = list(zip(pdf["x0"], pdf["y0"], pdf["x1"], pdf["y1"]))
         rings, chains = _link_directed_all(segs)
@@ -598,7 +598,7 @@ def region_rings(tiles_df: DataFrame, levels: list[float],
 
     cols = [f.name for f in _RING_SCHEMA.fields]
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band, zoom, level = int(key[0]), int(key[1]), float(key[2])
         n = len(pdf)
         k0s = list(pdf["k0"])
@@ -668,7 +668,7 @@ def contour_polygon_bands(tiles_df: DataFrame, levels: list[float],
 
     cols = [f.name for f in _BAND_SCHEMA.fields]
 
-    def build_band(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_band(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band, zoom, bidx = int(key[0]), int(key[1]), int(key[2])
         rings_ = []
         for r in pdf.itertuples():

@@ -251,7 +251,7 @@ def dem_op(tiles_df: DataFrame, op: str, tile: int = 256,
     halo = tiles_df.mapInPandas(lambda it: _emit_halo(it, tile),
                                 schema=_HALO_SCHEMA)
 
-    def compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compute(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band, zoom, tx, ty = (int(key[0]), int(key[1]), int(key[2]), int(key[3]))
         pad = _assemble_padded(pdf, tile)
         if pad is None:
@@ -412,7 +412,7 @@ def viewshed(tiles_df: DataFrame, ox: float, oy: float, oz: float,
     ])
     rays = tiles_df.mapInPandas(emit, ray_schema)
 
-    def scan(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def scan(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("rad", kind="stable")
         el = pdf["el"].values
         # visible iff at or above every strictly-closer pixel's horizon
@@ -500,7 +500,7 @@ def los(tiles_df: DataFrame, pairs_df: DataFrame,
 
     cells = pairs_df.mapInPandas(emit, _LOS_CELL_SCHEMA)
 
-    def check(key, tiles_pdf: pd.DataFrame,
+    def check(key: tuple, tiles_pdf: pd.DataFrame,
               cells_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(cells_pdf):
             return pd.DataFrame(columns=["pid", "visible"])

@@ -306,7 +306,7 @@ def _assemble_sheared(pdf: pd.DataFrame, s_i: int, ty: int,
 
 def _make_wave_fn(bnd: dict, pal: np.ndarray, cube: np.ndarray | None,
                   n_bits: int, tile: int, width: int, height: int):
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         s_i, ty = int(key[0]), int(key[1])
         st = bnd.get((s_i, ty))
         if st is None:
@@ -441,7 +441,7 @@ def dither_rgb2pct(tiles_df: DataFrame, palette: np.ndarray,
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               piece_schema.fields])
 
-    def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         acc = np.zeros((tile, tile), np.uint8)
         for rec in pdf.itertuples():
             px = np.frombuffer(rec.px, np.uint8).reshape(tile, tile)

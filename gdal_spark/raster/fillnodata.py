@@ -123,7 +123,7 @@ def fillnodata(tiles_df: DataFrame, max_dist: int, smoothing: int = 0,
     nbrs = tiles_df.mapInPandas(replicate, _NBR_SCHEMA)
     side = 2 * k + 1
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         center = pdf[(pdf.dx == 0) & (pdf.dy == 0)]
         if center.empty:
             return pd.DataFrame(columns=[f.name for f in TILE_SCHEMA.fields])

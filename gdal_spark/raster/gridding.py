@@ -182,7 +182,7 @@ def grid_linear(points: DataFrame, x0: float, y0: float,
                                T.StructField("j", T.LongType()),
                                T.StructField("value", T.DoubleType())])
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bx, by = int(key[0]), int(key[1])
         pts = np.column_stack([pdf["_pi"].values, pdf["_pj"].values])
         vals = pdf[z_col].values.astype(np.float64)

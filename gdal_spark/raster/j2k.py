@@ -471,10 +471,6 @@ def _ceil_div(a, b):
     return -(-a // b)
 
 
-class J2KImage:
-    pass
-
-
 def _parse_siz(body):
     siz = {}
     (siz["rsiz"], siz["xsiz"], siz["ysiz"], siz["xosiz"], siz["yosiz"],
@@ -614,19 +610,7 @@ def decode_j2k(data: bytes) -> np.ndarray:
             out[c, ty0 - siz["yosiz"]:ty1 - siz["yosiz"],
                 tx0 - siz["xosiz"]:tx1 - siz["xosiz"]] = comps[c]
     if cod["mct"] == 1 and ncomp >= 3:
-        if irreversible:
-            # inverse ICT (irreversible YCbCr, G.3 eq G-7)
-            y, cb, cr = out[0], out[1], out[2]
-            out[0] = y + 1.402 * cr
-            out[1] = y - 0.344136 * cb - 0.714136 * cr
-            out[2] = y + 1.772 * cb
-        else:
-            # inverse RCT (reversible multi-component transform, G.2)
-            y0, y1, y2 = out[0], out[1], out[2]
-            g = y0 - ((y1 + y2) >> 2)
-            r = y2 + g
-            b = y1 + g
-            out[0], out[1], out[2] = r, g, b
+        inverse_mct(out, reversible=not irreversible)
     if irreversible:
         out = np.rint(out).astype(np.int64)
     for c in range(ncomp):
@@ -641,6 +625,24 @@ def decode_j2k(data: bytes) -> np.ndarray:
             np.clip(out[c], -(1 << (depth - 1)),
                     (1 << (depth - 1)) - 1, out=out[c])
     return out.astype(np.int32)
+
+
+def inverse_mct(comps, reversible: bool):
+    """Inverse multi-component transform of components 0-2 in place:
+    the RCT (G.2) when `reversible`, else the ICT (G.3 eq G-7). R, G and
+    B are computed into new arrays before any input is replaced, so
+    `comps` may be a list of planes or a stacked (n, H, W) array whose
+    rows alias the Y/Cb/Cr inputs."""
+    y0, y1, y2 = comps[0], comps[1], comps[2]
+    if reversible:
+        g = y0 - ((y1 + y2) >> 2)
+        r, b = y2 + g, y1 + g
+    else:
+        r = y0 + 1.402 * y2
+        g = y0 - 0.344136 * y1 - 0.714136 * y2
+        b = y0 + 1.772 * y1
+    comps[0], comps[1], comps[2] = r, g, b
+    return comps
 
 
 def _band_rect(tcx0, tcy0, tcx1, tcy1, nl, r, orient):

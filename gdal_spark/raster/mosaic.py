@@ -31,7 +31,7 @@ def mosaic(sources: DataFrame, tile: int = 256,
     wins). Returns the composited tile table."""
     keys = ["band", "zoom", "tile_x", "tile_y"]
 
-    def compose(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compose(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("seq")
         out = None
         dtype = None
@@ -108,7 +108,7 @@ def pansharpen(ms_tiles: DataFrame, pan_tiles: DataFrame,
                            F.col("dtype").alias("_pan_dtype"))
     joined = ms_tiles.join(pan, ["zoom", "tile_x", "tile_y"])
 
-    def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         zoom, tx, ty = int(key[0]), int(key[1]), int(key[2])
         pan_arr = decode_px(pdf.iloc[0]["_pan_px"],
                             pdf.iloc[0]["_pan_dtype"], tile)

@@ -185,7 +185,7 @@ def nearblack(tiles_df: DataFrame, width: int, height: int,
         T.StructField("edge_nb", T.BinaryType()),   # uint8[width], edge row
     ])
 
-    def phase_a(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def phase_a(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ty = int(key[0])
         rows = strip_rows(ty)
         bands, vals = _strip_arrays(pdf, width, rows, tile)
@@ -204,7 +204,7 @@ def nearblack(tiles_df: DataFrame, width: int, height: int,
     ])
 
     def make_fold(bottom_up: bool):
-        def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fold(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("tile_y", ascending=not bottom_up)
             enter = np.zeros(width, dtype=np.int64)
             out_ty, out_e = [], []
@@ -231,7 +231,7 @@ def nearblack(tiles_df: DataFrame, width: int, height: int,
         T.StructField("edge_nb2", T.BinaryType()),
     ])
 
-    def phase_b(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def phase_b(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ty = int(key[0])
         rows = strip_rows(ty)
         enter = np.frombuffer(pdf["enter"].iloc[0], dtype=np.int32)
@@ -272,7 +272,7 @@ def nearblack(tiles_df: DataFrame, width: int, height: int,
         make_fold(bottom_up=True), e_schema)
 
     # ---- phase C: exact pass-2 replay (bottom-up, horizontal max=0) ----
-    def phase_c(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def phase_c(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ty = int(key[0])
         rows = strip_rows(ty)
         enter = np.frombuffer(pdf["enter"].iloc[0], dtype=np.int32)

@@ -54,7 +54,7 @@ def color_histogram(tiles_df: DataFrame, tile: int = 256,
     nXSize x nYSize pixels, gdalmediancut.cpp:436-496)."""
     shift = 8 - bits
 
-    def partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[1]), int(key[2])
         w_t = tile if width is None else \
             max(0, min(tile, width - tx * tile))
@@ -239,7 +239,7 @@ def rgb_to_pct(tiles_df: DataFrame, palette: np.ndarray,
     palette indices. Pure map over tiles, palette ships in the closure."""
     pal = np.asarray(palette, np.float64)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         chans = {}
         zoom, tx, ty = int(key[0]), int(key[1]), int(key[2])
         for row in pdf.itertuples():

@@ -139,7 +139,7 @@ def tile_components(tiles_df: DataFrame, tile: int = 256,
                     connect: int = 4):
     """Stage 1: per-tile labeling. Returns (components, boundary_strips)."""
 
-    def emit(key, pdf: pd.DataFrame):
+    def emit(key: tuple, pdf: pd.DataFrame) -> tuple:
         comps, edges = [], []
         for r in pdf.itertuples():
             arr = decode_px(r.px, r.dtype, tile)
@@ -405,7 +405,7 @@ def boundary_segments(tiles_df: DataFrame, tile: int = 256,
     halo = tiles_df.mapInPandas(lambda it: _emit_halo(it, tile),
                                 _HALO_SCHEMA)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pad = _assemble_padded(pdf, tile)
         cols = [f.name for f in _RSEG_SCHEMA.fields]
         if pad is None:
@@ -559,7 +559,7 @@ def polygonize_polygons(tiles_df: DataFrame, tile: int = 256,
     vals = comp.groupBy("comp").agg(F.first("value").alias("value"))
     segs = segs.join(F.broadcast(vals), "comp")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         comp_id = int(key[0])
         rings = _assemble_rings(pdf["x0"].values, pdf["y0"].values,
                                 pdf["x1"].values, pdf["y1"].values,

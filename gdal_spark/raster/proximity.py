@@ -148,7 +148,7 @@ def proximity(tiles_df: DataFrame, tile: int = 256,
     """tile table -> float64 distance tile table (targets: pixels != 0)."""
     keys = ["band", "zoom", "tile_x", "tile_y"]
 
-    def init(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def init(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         for r in pdf.itertuples():
             arr = decode_px(r.px, r.dtype, tile)
@@ -192,7 +192,7 @@ def proximity(tiles_df: DataFrame, tile: int = 256,
             yield pd.DataFrame(out, columns=cols) if out else \
                 pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
 
-    def relax(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def relax(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # state row has px; ring rows have sy/sx — distinguish by px null
         st = pdf[pdf["px"].notna()]
         if st.empty:
@@ -242,7 +242,7 @@ def proximity(tiles_df: DataFrame, tile: int = 256,
         if n_changed == 0:
             break
 
-    def finish(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def finish(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         for r in pdf.itertuples():
             d2, _, _ = _unpack(r.px, tile)

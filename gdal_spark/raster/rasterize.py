@@ -190,7 +190,7 @@ def rasterize(geoms: DataFrame, grid: GridSpec, merge_alg: str = "replace",
                 .withColumn("seq", F.lit(-1).cast("long")))
         cand = cand.select("geom", "burn", "seq", "tile_x", "tile_y")             .unionByName(allt)
 
-    def burn_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def burn_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         if invert:
             cover = np.zeros((tile, tile), dtype=bool)

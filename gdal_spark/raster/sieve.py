@@ -56,7 +56,7 @@ def _neighbor_pairs(tiles_df: DataFrame, tile: int,
     """Adjacent same-tile components with DIFFERENT labels (any values) —
     the intra-tile part of the sieve neighbour graph."""
 
-    def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def emit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = set()
         for r in pdf.itertuples():
             arr = decode_px(r.px, r.dtype, tile)
@@ -319,7 +319,7 @@ def sieve(tiles_df: DataFrame, threshold: int, tile: int = 256,
 
     tile_cols = [f.name for f in TILE_SCHEMA.fields]
 
-    def rewrite(key, tiles_pdf: pd.DataFrame,
+    def rewrite(key: tuple, tiles_pdf: pd.DataFrame,
                 nv_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(tiles_pdf):
             return pd.DataFrame(columns=tile_cols)

@@ -159,7 +159,7 @@ def band_calc(tiles_df: DataFrame, expr: str, tile: int = 256,
                 "clip", "floor", "ceil", "round", "power", "sign", "pi")}
     _validate_calc_expr(expr, set(allowed))
 
-    def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         zoom, tx, ty = int(key[0]), int(key[1]), int(key[2])
         env = dict(allowed)
         for r in pdf.itertuples():

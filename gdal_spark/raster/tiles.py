@@ -174,7 +174,7 @@ def retile(df: DataFrame, src_tile: int, dst_tile: int) -> DataFrame:
                    "ox int, oy int, w int, h int")
     frags = df.mapInPandas(emit, frag_schema)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # r0["dtype"], not r0.dtype — attribute access hits the pandas
         # Series dtype, not the column
         dt = str(pdf.iloc[0]["dtype"])
@@ -307,7 +307,7 @@ def pixels_to_tiles(px_df: DataFrame, tile: int = TILE,
         (F.col(y_col) % tile).cast("int").alias("ly"),
         F.col(v_col).cast("double").alias("v"))
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         block = np.full((tile, tile), fill, np.dtype(dtype))
         block[pdf["ly"].to_numpy(), pdf["lx"].to_numpy()] = \

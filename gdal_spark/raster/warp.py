@@ -605,7 +605,7 @@ def warp(tiles_df: DataFrame, spec: WarpSpec,
 
     fed = tiles_df.mapInPandas(emit, schema=_EMIT_SCHEMA)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band, dtx, dty = int(key[0]), int(key[1]), int(key[2])
         st = spec.src_grid.tile
         use_mask = spec.src_nodata is not None or spec.cutline is not None

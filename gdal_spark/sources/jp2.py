@@ -166,6 +166,7 @@ def read_jp2(spark: SparkSession, path: str, tile: int = 256):
         .repartition(min(len(rows), 32))
     mct = cod["mct"]
     ncomp = siz["csiz"]
+    irreversible = cod["transform"] == 0
 
     def decode(s):
         tdata = b""
@@ -183,22 +184,14 @@ def read_jp2(spark: SparkSession, path: str, tile: int = 256):
         tx1 = min(siz["xtosiz"] + (tx + 1) * siz["xtsiz"], siz["xsiz"])
         ty1 = min(siz["ytosiz"] + (ty + 1) * siz["ytsiz"], siz["ysiz"])
         comps = j2k._decode_tile(tdata, siz, cod, qcd, tx0, ty0, tx1, ty1)
-        if cod["transform"] == 0:
-            # irreversible: stay float through the ICT, round
-            # once (mirrors decode_j2k's lossy tail)
-            comps = [c.astype(np.float64) for c in comps]
-            if mct == 1 and ncomp >= 3:
-                y, cb, cr = comps[0], comps[1], comps[2]
-                comps[0] = y + 1.402 * cr
-                comps[1] = y - 0.344136 * cb - 0.714136 * cr
-                comps[2] = y + 1.772 * cb
+        # irreversible: stay float through the ICT, round once (mirrors
+        # decode_j2k's lossy tail)
+        comps = [c.astype(np.float64 if irreversible else np.int64)
+                 for c in comps]
+        if mct == 1 and ncomp >= 3:
+            j2k.inverse_mct(comps, reversible=not irreversible)
+        if irreversible:
             comps = [np.rint(c).astype(np.int64) for c in comps]
-        else:
-            comps = [c.astype(np.int64) for c in comps]
-            if mct == 1 and ncomp >= 3:
-                y0, y1c, y2 = comps[0], comps[1], comps[2]
-                g = y0 - ((y1c + y2) >> 2)
-                comps[0], comps[1], comps[2] = y2 + g, g, y1c + g
         for c in range(ncomp):
             depth = siz["comps"][c]["depth"]
             if not siz["comps"][c]["signed"]:

@@ -338,16 +338,6 @@ def decode_tile(buf: bytes) -> list:
 # mercator <-> tile-local quantization
 # ---------------------------------------------------------------------------
 
-def tile_of_merc(mx, my, zoom: int):
-    """XYZ (top-origin) tile indices + fractional tile units. The float
-    expressions are kept in this exact order so the SQL oracles can replay
-    them bit-for-bit."""
-    span = SPAN0 / (1 << zoom)
-    u = (np.asarray(mx, np.float64) + ORIGIN_SHIFT) / span
-    v = (ORIGIN_SHIFT - np.asarray(my, np.float64)) / span
-    return np.floor(u).astype(np.int64), np.floor(v).astype(np.int64), u, v
-
-
 def quantize(u, v, tx, ty, extent: int = DEFAULT_EXTENT):
     """Fractional tile units -> integer tile-local pixel coords."""
     ix = np.floor((np.asarray(u) - tx) * extent).astype(np.int64)

@@ -54,12 +54,6 @@ def _adler_combine(ad1: int, ad2: int, len2: int) -> int:
 # scanline filters (PNG spec §6)
 # ---------------------------------------------------------------------------
 
-def _paeth(a, b, c):
-    p = a.astype(np.int32) + b - c
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-
-
 def _unfilter(raw: np.ndarray, height: int, stride: int, bpp: int
               ) -> np.ndarray:
     """raw: (height, 1+stride) filtered scanlines -> (height, stride)."""

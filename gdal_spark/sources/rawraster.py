@@ -116,13 +116,13 @@ def read_envi(spark: SparkSession, path: str, tile: int = 256):
         hdr_path = path
         stem = path[:-4]
         raw_path = next((stem + e for e in ("", ".dat", ".img", ".bil", ".bsq", ".bip")
-                         if os.path.isfile(stem + e) and not (stem + e).lower().endswith(".hdr")),
+                         if vsi.exists(stem + e) and not (stem + e).lower().endswith(".hdr")),
                         stem)
     else:
         raw_path = path
         hdr_path = next((c for c in (path + ".hdr",
                                      os.path.splitext(path)[0] + ".hdr")
-                         if os.path.isfile(c)), path + ".hdr")
+                         if vsi.exists(c)), path + ".hdr")
     meta = parse_envi_header(hdr_path)
     dtype = _ENVI_DTYPE[int(meta["data type"])]
     nodata = (float(meta["data ignore value"])
@@ -205,7 +205,7 @@ def read_ehdr(spark: SparkSession, path: str, tile: int = 256):
     hdr_path = path if path.lower().endswith(".hdr") else stem + ".hdr"
     if path.lower().endswith(".hdr"):
         path = next(stem + e for e in (".bil", ".bsq", ".bip", ".flt", ".img")
-                    if os.path.isfile(stem + e))
+                    if vsi.exists(stem + e))
     meta = {}
     for line in vsi.read_all(hdr_path).decode().splitlines():
         tok = line.split()

@@ -20,13 +20,11 @@ space-separated text parts distributed.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..core import vsi
-from ..raster.tiles import TILE_SCHEMA, encode_px
+from ..raster.tiles import pixels_to_tiles
 
 _HEAD = 64 << 10
 
@@ -79,24 +77,11 @@ def read_xyz(spark: SparkSession, path: str, tile: int = 256,
 
     col = F.round((F.col("x") - F.lit(ext.x0)) / F.lit(dx)).cast("long")
     row = F.round((F.lit(ext.y1) - F.col("y")) / F.lit(dy)).cast("long")
-    cells = df.select(col.alias("c"), row.alias("r"), "v") \
-        .withColumn("tile_x", F.floor(F.col("c") / tile)) \
-        .withColumn("tile_y", F.floor(F.col("r") / tile))
-
-    fill = 0.0 if nodata is None else nodata
-    cols = [f.name for f in TILE_SCHEMA.fields]
-
-    def assemble(key, pdf):
-        tx, ty = int(key[0]), int(key[1])
-        block = np.full((tile, tile), fill, np.float64)
-        block[pdf["r"].to_numpy() - ty * tile,
-              pdf["c"].to_numpy() - tx * tile] = pdf["v"].to_numpy()
-        return pd.DataFrame([(band, 0, tx, ty, "f8", nodata,
-                              encode_px(block))], columns=cols)
-
-    tiles = cells.groupBy("tile_x", "tile_y").applyInPandas(assemble,
-                                                            TILE_SCHEMA)
-    return tiles, grid
+    cells = df.select(col.alias("c"), row.alias("r"), "v")
+    tiles = pixels_to_tiles(cells, tile, x_col="c", y_col="r", v_col="v",
+                            fill=0.0 if nodata is None else nodata,
+                            band=band)
+    return tiles.withColumn("nodata", F.lit(nodata).cast("double")), grid
 
 
 def write_xyz(tiles: DataFrame, path: str, tile: int = 256,

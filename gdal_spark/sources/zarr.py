@@ -81,9 +81,10 @@ def _read_chunk(file: str, comp: str | None, dtype: np.dtype, shape,
                 fill, out_dt) -> np.ndarray:
     """One chunk file -> `shape` array of `out_dt`; a chunk absent on
     disk reads as fill_value (the sparse-store rule)."""
-    if not os.path.exists(file):
+    try:
+        buf = vsi.read_all(file)
+    except FileNotFoundError:
         return np.full(shape, fill, out_dt)
-    buf = vsi.read_all(file)
     if comp == "gzip":
         buf = gzip.decompress(buf)
     elif comp == "zlib":
@@ -177,7 +178,7 @@ def _read_zarr3(spark: SparkSession, path: str, band: int = 1,
     """v3 store or array dir -> (tile table, meta). Group stores pick
     the named array (or the largest rank>=2 one, the reference's
     classic-open subdataset heuristic)."""
-    if not os.path.exists(os.path.join(path, "zarr.json")):
+    if not vsi.exists(os.path.join(path, "zarr.json")):
         raise ValueError(f"{path}: no zarr.json")
     node = json.loads(vsi.read_all(os.path.join(path, "zarr.json")))
     adir = path
@@ -270,8 +271,8 @@ def read_zarr(spark: SparkSession, path: str, band: int = 1,
     """-> (tile table, metadata). One task batch per chunk; chunks absent
     on disk materialize as fill_value tiles (sparse-store reads).
     Dispatches on store version: .zarray = v2, zarr.json = v3."""
-    if not os.path.exists(os.path.join(path, ".zarray")) and \
-            os.path.exists(os.path.join(path, "zarr.json")):
+    if not vsi.exists(os.path.join(path, ".zarray")) and \
+            vsi.exists(os.path.join(path, "zarr.json")):
         return _read_zarr3(spark, path, band=band, array=array)
     meta = read_zarr_metadata(path)
     h, w = meta["shape"]

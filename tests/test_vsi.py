@@ -112,3 +112,35 @@ def test_registered_backend_drives_format_reader(tmp_path):
 
     with pytest.raises(ValueError):
         vsi.pread("nosuchscheme://x", 0, 1)
+
+
+def test_zarr_chunk_presence_goes_through_backend(tmp_path, monkeypatch):
+    """Under a dict-backed mem:// backend a stored Zarr chunk decodes to
+    its values and a missing one reads as fill_value — presence comes
+    from the backend's fsize (FileNotFoundError = absent), not from the
+    local file system."""
+    from gdal_spark.sources.zarr import _read_chunk, write_zarr_nd
+
+    arr = np.arange(64, dtype="<f8").reshape(8, 8)
+    write_zarr_nd(arr, str(tmp_path / "z"), chunks=(4, 4))
+    store = {f"mem://z/{f.name}": f.read_bytes()
+             for f in (tmp_path / "z").iterdir()}
+    del store["mem://z/1.1"]
+
+    def mem_fsize(path):
+        try:
+            return len(store[path])
+        except KeyError:
+            raise FileNotFoundError(path) from None
+
+    monkeypatch.setitem(vsi._BACKENDS, "mem", (
+        lambda path, off, n: store[path][off:off + n], mem_fsize))
+    assert vsi.exists("mem://z/.zarray")
+    assert not vsi.exists("mem://z/1.1")
+
+    def chunk(name):
+        return _read_chunk(f"mem://z/{name}", "zlib", np.dtype("<f8"),
+                           (4, 4), -1.0, "float64")
+
+    assert np.array_equal(chunk("0.1"), arr[:4, 4:])
+    assert np.array_equal(chunk("1.1"), np.full((4, 4), -1.0))

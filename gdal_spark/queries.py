@@ -12,6 +12,8 @@ Naming: q_* functions take (spark, sf_dir) and return a DataFrame.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -2138,11 +2140,21 @@ def _density_tiles_full(spark, sf_dir):
                                                            TILE_SCHEMA)
 
 
+@functools.cache
+def _scratch_dir():
+    """This process's `gdal_spark_<pid>` directory in the system temp dir,
+    made on first use and removed at interpreter exit: the DataFrames
+    read their paths lazily, so nothing is removed earlier."""
+    d = os.path.join(tempfile.gettempdir(), f"gdal_spark_{os.getpid()}")
+    os.makedirs(d, exist_ok=True)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def _tmp(name):
-    """Scratch path `gdal_spark_<pid>_<name>` in the system temp dir — one
-    per query and driver process, so concurrent drivers never collide."""
-    return os.path.join(tempfile.gettempdir(),
-                        f"gdal_spark_{os.getpid()}_{name}")
+    """Scratch path `<name>` in `_scratch_dir()` — one per query and driver
+    process, so concurrent drivers never collide."""
+    return os.path.join(_scratch_dir(), name)
 
 
 def _xyz(tiles, name="v"):
@@ -5918,7 +5930,7 @@ def q_jsonfg_roundtrip(spark, sf_dir):
     out = _tmp("jsonfg")
     shutil.rmtree(out, ignore_errors=True)
     write_jsonfg(df, out, crs="[EPSG:4326]", time_cols=("t0", "t1"))
-    back = read_jsonfg(spark, out + "/part-*")
+    back = read_jsonfg(spark, out)
     return _lonlat(
         back,
         F.get_json_object("props", "$.doc_id").cast("long").alias("doc_id"),

@@ -41,6 +41,14 @@ def get_spark(app: str = "gdal_spark", cores: int | None = None,
         # (~1s per complex query at 1ms/round-trip). Error messages lose
         # only the Python call-site line, nothing else.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers fork from gdal_spark.worker_daemon, which stops
+        # every task from re-parsing pyspark.zip and the spark-core jar and
+        # imports the worker stack once before fork. The daemon module must
+        # be importable when the daemon starts: the spark-submit entry
+        # points (jobs/*.py) build their own session and keep the stock
+        # daemon, because on a cluster `--py-files` reach sys.path only per
+        # task, after the daemon has started.
+        .config("spark.python.daemon.module", "gdal_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     # the gate is cached process-wide on first read; force it to resolve

@@ -528,6 +528,16 @@ def _props_as_str(props: dict) -> dict:
     return out
 
 
+def pbf_files(spark, out_dir: str):
+    """(path, content) of every `.pbf` under `out_dir`. A recursive lookup
+    with a file-name filter: a `*/*/*.pbf` glob makes Spark log a stack
+    trace while it looks for a metadata directory in the glob path."""
+    return (spark.read.format("binaryFile")
+            .option("recursiveFileLookup", "true")
+            .option("pathGlobFilter", "*.pbf")
+            .load(out_dir).select("path", "content"))
+
+
 def read_mvt(spark, out_dir: str):
     """Read a z/x/y.pbf tree back: one task per tile file (binaryFile
     scan), mapInPandas decode -> (z, x, y, layer, fid, gtype, geom
@@ -536,8 +546,7 @@ def read_mvt(spark, out_dir: str):
     import pandas as pd
     from pyspark.sql import types as T
 
-    bf = spark.read.format("binaryFile").load(f"{out_dir}/*/*/*.pbf") \
-        .select("path", "content")
+    bf = pbf_files(spark, out_dir)
     schema = T.StructType([
         T.StructField("z", T.IntegerType()),
         T.StructField("x", T.LongType()), T.StructField("y", T.LongType()),
@@ -576,8 +585,7 @@ def read_mvt_vertices(spark, out_dir: str):
     import pandas as pd
     from pyspark.sql import types as T
 
-    bf = spark.read.format("binaryFile").load(f"{out_dir}/*/*/*.pbf") \
-        .select("path", "content")
+    bf = pbf_files(spark, out_dir)
     schema = T.StructType([
         T.StructField("z", T.IntegerType()),
         T.StructField("x", T.LongType()), T.StructField("y", T.LongType()),

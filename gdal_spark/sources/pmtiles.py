@@ -33,7 +33,7 @@ from ..core import vsi
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .mvt import _get_varint, _put_varint, decode_tile
+from .mvt import _get_varint, _put_varint, decode_tile, pbf_files
 
 HEADER_LEN = 127
 ROOT_CAP = 16384          # entries before spilling to leaf directories
@@ -375,7 +375,7 @@ def mvt_dir_to_pmtiles(spark: SparkSession, mvt_dir: str,
                        path: str) -> int:
     """Pack a z/x/y.pbf tree (mvt.write_mvt output) into one archive."""
     from pyspark.sql import functions as F
-    bf = spark.read.format("binaryFile").load(f"{mvt_dir}/*/*/*.pbf")
+    bf = pbf_files(spark, mvt_dir)
     parts = F.split(F.col("path"), "/")
     n = F.size(parts)
     df = bf.select(
